@@ -7,7 +7,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd arg: comma-separated query-name subset, for fast
-    // local iteration with tools/check_subset.py (full runs omit it).
+    // local iteration; tools/check.py takes the same subset as its
+    // 3rd arg (full runs omit it).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = GraftSession.defaultCores.toString

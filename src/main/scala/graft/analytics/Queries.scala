@@ -925,10 +925,10 @@ object Queries {
     * an explicit override pins the spelling for specs and plan
     * replays.
     *
-    * Value MEASURED this round (VERDICT r13 item 2;
-    * tools/BandedCutoverAb over customer-scaled orders — BenchCorpus
-    * keeps customers verbatim, so a dedicated corpus scales
-    * o_custkey with the replicas; bench_banded_cutover.json):
+    * Value MEASURED in round 14 (VERDICT r13 item 2; an A/B over
+    * customer-scaled orders — the 10× bench corpus keeps customers
+    * verbatim, so a dedicated corpus scales o_custkey with the
+    * replicas; numbers in commit c7ecb30):
     * plain/banded a28+a35+a36 medians 1.44/7.66 s at 17 MB (116 k
     * customers), 4.07/7.33 s at 69 MB (465 k), 7.60/8.86 s at
     * 137 MB (929 k), 15.06/9.42 s at 275 MB (1.9 M customers) —

@@ -55,10 +55,11 @@ object Dedup {
     *
     * The score is applied AT EMISSION, inside the explode stage
     * (round 10, the narrow-shuffle law's last candidate-path
-    * violation — found by tools/ExchangeAudit): est/hamming are pure
-    * functions of the signature pair, so only (a_id, b_id, score)
-    * ever reaches the candidate `dropDuplicates` exchange. The
-    * previous spelling shipped BOTH full signatures through it —
+    * violation — found by a wide-exchange plan audit, commit
+    * 42e79c5): est/hamming are pure functions of the signature
+    * pair, so only (a_id, b_id, score) ever reaches the candidate
+    * `dropDuplicates` exchange. The previous spelling shipped BOTH
+    * full signatures through it —
     * ~2 KB per candidate row at 128 perms where the scored row is
     * 24 B, and a pair colliding in k bands shipped them k times.
     * Duplicate candidates carry identical signatures, so scoring
@@ -1094,9 +1095,10 @@ object Dedup {
     val repDocs = fam.select(col("rep").as("doc_id"), col("text"))
     // r14 note (VERDICT r13 item 3, measured and REJECTED): persisting
     // this two-consumer frame via FrameCache moved the warm wall
-    // nowhere (DragBench 1.23→1.20 s) and cost ~1 s of cold
-    // materialization — the shingle recompute is NOT the entry's
-    // wall, the pair machinery is (now on the joinback banding).
+    // nowhere (1.23→1.20 s standalone, commit c7ecb30) and cost ~1 s
+    // of cold materialization — the shingle recompute is NOT the
+    // entry's wall, the pair machinery is (now on the joinback
+    // banding).
     val sets = withShingleHashes(repDocs).filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"))
     // r14: the JOINBACK banding (d2b, the 100 TB spelling — band rows

@@ -139,7 +139,7 @@ case class ShingleHashes(child: Expression, n: Int, distinct: Boolean = true)
   // One static kernel call instead of CodegenFallback's boxed
   // references[i].eval(row): keeps the scan's whole-stage codegen
   // span intact and skips the per-row InternalRow copy (delta
-  // measured on the 10x corpus in SCALE.md).
+  // measured on the 10x corpus in commit a87e2a6's scale notes).
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
       c => s"graft.functions.ShingleSupport.shingleHashes($c, $n, $distinct)")

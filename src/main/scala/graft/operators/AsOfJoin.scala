@@ -47,7 +47,7 @@ object AsOfJoin {
     // partitions (their carried payload is null regardless of
     // partition-mates), so the left source is scanned exactly once
     // (a filter-and-union-back spelling costs a second corpus pass —
-    // ScanAudit's law).
+    // the one-scan-per-corpus law).
     // materialized ONCE as a column: an inline expression in
     // partitionBy is re-projected per window, and the payload fold's
     // windows would then carry distinct partition attributes — two

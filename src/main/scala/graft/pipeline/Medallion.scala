@@ -71,8 +71,13 @@ object Medallion {
     * names so it serves any events-like feed.
     *
     * dropDuplicates shuffles once on the dedup keys; everything else
-    * is narrow. In streaming mode the same call becomes stateful
-    * dedup bounded by the watermark.
+    * is narrow. On a streaming frame the same call becomes stateful
+    * dedup, and Spark bounds that state only when the input is
+    * already watermarked AND the watermarked event-time column is one
+    * of `dedupKeys`: keys older than the watermark are then evicted.
+    * Otherwise the state keeps every key seen for the life of the
+    * query — a watermark set downstream of this call, or on an
+    * event-time column that is not a key, bounds nothing here.
     */
   def silverClean(bronze: DataFrame, dedupKeys: Seq[String]): DataFrame =
     bronze.dropDuplicates(dedupKeys)

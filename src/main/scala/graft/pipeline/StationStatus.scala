@@ -41,8 +41,15 @@ object StationStatus {
       dedupKeys = Seq("station_id", "last_reported"))
 
   /** Gold: 15-minute tumbling window × station with the reference's
-    * three averages (spark_streaming_job.py:105-117). Add
-    * `.withWatermark("event_ts", "2 hours")` upstream for streaming.
+    * three averages (spark_streaming_job.py:105-117). For streaming,
+    * add `.withWatermark("event_ts", "2 hours")` between [[silver]]
+    * and this call: it bounds this window aggregation's state (closed
+    * windows are emitted and dropped), but not [[silver]]'s dedup
+    * state. Silver dedups on (station_id, last_reported) before any
+    * watermark exists, so its streaming state keeps every record;
+    * it would be bounded only by a watermark set before the dedup on
+    * an event-time column that is one of its keys (see
+    * [[Medallion.silverClean]]).
     */
   def gold(silverDf: DataFrame): DataFrame =
     silverDf

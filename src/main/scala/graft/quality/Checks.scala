@@ -187,38 +187,41 @@ object Checks {
   }
 
   /** Run a parsed Soda suite: the schema-presence check becomes a
-    * metadata-only row (value = number of missing required columns)
-    * unioned with the single-pass aggregate checks — still exactly
-    * one scan of the table.
+    * literal row (value = number of missing required columns, known
+    * from the schema alone) in the same single aggregation pass as
+    * the aggregate checks — one scan of the table, no extra job.
     */
   def runSuite(df: DataFrame, suite: SodaSuite): DataFrame = {
-    val agg = run(df, suite.checks)
-    if (suite.requiredColumns.isEmpty) agg
-    else {
+    val schemaRow = if (suite.requiredColumns.isEmpty) Nil else {
       val missing = missingColumns(df, suite.requiredColumns)
-      val schemaRow = df.sparkSession.range(1).select(
-        lit("schema_required_columns").as("check_name"),
-        lit(missing.size.toDouble).as("value"),
-        lit(missing.isEmpty).as("passed"))
-      agg.unionAll(schemaRow).orderBy(col("check_name"))
+      Seq(("schema_required_columns", lit(missing.size.toDouble), lit(missing.isEmpty)))
     }
+    onePass(df, suite.checks, schemaRow)
   }
 
   /** Compile a check suite into one aggregation pass; returns a long
     * DataFrame (check_name, value, passed) ordered by check_name.
     */
-  def run(df: DataFrame, checks: Seq[Check]): DataFrame = {
-    val aggs = checks.flatMap { c =>
-      Seq(c.value.as(s"__v_${c.name}"))
-    }
+  def run(df: DataFrame, checks: Seq[Check]): DataFrame = onePass(df, checks, Nil)
+
+  /** One aggregation over `df`, exploded into one row per check. The
+    * rows are few and named at plan time, so they are put in
+    * check_name order on the driver: the result needs no sort (a
+    * range sort here costs a sampling job and a shuffle for ten rows).
+    */
+  private def onePass(df: DataFrame, checks: Seq[Check],
+                      literalRows: Seq[(String, Column, Column)]): DataFrame = {
+    val aggs = checks.map(c => c.value.as(s"__v_${c.name}"))
     val wide = df.agg(aggs.head, aggs.tail: _*)
-    val structs = checks.map { c =>
+    val rows = checks.map { c =>
       val v = col(s"__v_${c.name}")
-      struct(lit(c.name).as("check_name"), v.as("value"), c.passed(v).as("passed"))
+      (c.name, v, c.passed(v))
+    } ++ literalRows
+    val structs = rows.sortBy(_._1).map { case (name, v, passed) =>
+      struct(lit(name).as("check_name"), v.as("value"), passed.as("passed"))
     }
     wide.select(explode(array(structs: _*)).as("r"))
       .select(col("r.check_name"), col("r.value"), col("r.passed"))
-      .orderBy(col("check_name"))
   }
 
   /** The verified suite over `events` (SURVEY §2 p5), mirroring the
@@ -321,7 +324,7 @@ object Checks {
     * silently drop it from both counts; the null key also never
     * matches in the join, so the marker column stays null for it).
     *
-    * Round 11 (a ScanAudit find): edges sharing a CHILD (a fact
+    * Round 11 (a scan-count audit find): edges sharing a CHILD (a fact
     * table with several FKs — p12's lineitem carries three) fuse
     * into ONE pass over it: the shared child is scanned once with
     * every edge's key column, probes each parent through its own
@@ -517,9 +520,10 @@ object Checks {
     * scans — the pass-count win once scans carry real bytes).
     * Metadata-only (file-size estimate, no extra pass), deterministic
     * per corpus; both spellings produce identical rows, so the switch
-    * can never move a result. Value set from this round's same-host
-    * A/B (OPTIMIZATION_r14.md): split wins at sf0.1 (11 MB), fused
-    * wins at 10× (110 MB) — 32 MiB sits between the measured rungs.
+    * can never move a result. Value set from a same-host A/B
+    * (optimization report in commit 5d80315): split wins at sf0.1
+    * (11 MB), fused wins at 10× (110 MB) — 32 MiB sits between the
+    * measured rungs.
     */
   private[graft] val P14bFuseMinBytes: Long = 32L << 20
 
@@ -545,8 +549,8 @@ object Checks {
     // page-cached dimension-scale input the third scan costs ~0.1 s
     // while the fused spelling pays per-row when()+HLL updates on
     // EVERY full-pass row — driver-measured 2× slower at sf0.1
-    // (BENCH_r13 p14b 2.58→5.23 s, this round's same-host A/B in
-    // OPTIMIZATION_r14.md). Both spellings are bit-identical (same
+    // (round-13 bench p14b 2.58→5.23 s in commit 9d6443c, same-host
+    // A/B in commit 5d80315). Both spellings are bit-identical (same
     // HLL register state), spec- and oracle-pinned.
     // The rejected third alternative (measured 2.0→3.7 s warm at
     // sf0.1): fusing the sketches into the slice's multi-distinct agg
@@ -611,8 +615,8 @@ object Checks {
       .orderBy(col("col_name"))
   }
 
-  /** Profile drift (p15): p14's one-pass profile run on a baseline
-    * and a candidate slice, joined per column — the "did the new
+  /** Column-profile drift (p15): p14's one-pass profile run on a
+    * baseline and a candidate slice, joined per column — the "did the new
     * partition change shape?" gate a pipeline runs before promoting a
     * batch: null-rate movement, distinct-cardinality ratio, and
     * min/max range escape. Each side is the single profile pass

@@ -1320,7 +1320,8 @@ object Similarity {
     * iteration still buy anything?), cells actually used (did init
     * or a collapse strand empty cells?), and the min/max cell
     * occupancy (IVF probe cost is governed by the fattest cell —
-    * SCALE.md's cell-size-skew finding made a per-corpus report).
+    * the 10×/50× soak's cell-size-skew finding in commit a87e2a6
+    * made a per-corpus report).
     * This is the evidence behind the `iters = 3` default every IVF
     * entry inherits: the curve flattens where marginal inertia gain
     * dies, and a report beats folklore when a new corpus arrives.

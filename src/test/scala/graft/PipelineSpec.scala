@@ -152,6 +152,68 @@ class PipelineSpec extends GraftSpecBase {
     }
   }
 
+  /** Number of Spark jobs `body` starts on this thread, read from a
+    * SparkListener. A sentinel job in its own group runs afterwards:
+    * the listener queue is FIFO, so once the sentinel's start arrives
+    * every job event of `body` has been delivered too.
+    */
+  private def jobsStarted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(g) if g == s"$group-sentinel" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener never caught up")
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("runSuite costs no more Spark jobs than a plain count and returns rows in check_name order") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_checks").toString
+    (0 until 8000).map(i => (i.toLong, s"w${i % 96}", (i % 101) / 100.0))
+      .toDF("station_id", "window_start", "avg_pct")
+      .repartition(4).write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    // the reference gold suite's shape (no duplicate_count: its
+    // count-distinct needs an exchange of its own)
+    val suite = quality.Checks.fromYaml(
+      """checks for gold:
+        |  - schema:
+        |      fail:
+        |        when required columns missing: [station_id, window_start, avg_pct]
+        |  - row_count > 0:
+        |  - missing_count(station_id) = 0:
+        |  - avg(avg_pct) between 0 and 1:
+        |  - min(avg_pct) >= 0:
+        |  - max(avg_pct) <= 1:
+        |""".stripMargin)
+    val plain = jobsStarted(df.agg(count(lit(1))).collect())
+    var rows = Array.empty[Row]
+    val suiteJobs = jobsStarted { rows = quality.Checks.runSuite(df, suite).collect() }
+    assert(suiteJobs == plain,
+      s"runSuite started $suiteJobs jobs where one aggregation pass starts $plain")
+    val names = rows.map(_.getString(0)).toSeq
+    assert(names == names.sorted && names.size == 6, s"rows out of check_name order: $names")
+    assert(rows.forall(_.getBoolean(2)), s"every check passes on this frame: ${rows.toSeq}")
+  }
+
   test("reference checks_gold.yml loads VERBATIM and gates a gold batch") {
     // the reference's actual Soda file, unmodified
     // (reference soda/checks/checks_gold.yml:1-11)

@@ -162,7 +162,8 @@ class PlanShapeSpec extends GraftSpecBase {
   }
 
   test("d2: the candidate dedup exchange is scored and narrow (no pair+signature rows)") {
-    // r10 (found by tools/ExchangeAudit): bucketPairs used to ship
+    // r10 (found by a wide-exchange plan audit, commit 42e79c5):
+    // bucketPairs used to ship
     // BOTH full 128-long signatures through its dropDuplicates
     // exchange (~2 KB/candidate vs the 24 B scored row, ×k for a
     // pair colliding in k bands). est/hamming are pure functions of
