@@ -10,12 +10,15 @@ import graft.Tables
   * representative (keep-min-id) — pairwise output alone can't answer
   * "which docs survive".
   *
-  * Algorithm: iterative min-label propagation — each node adopts the
-  * minimum label in its neighborhood until fixpoint. Iterations are
+  * Near-dup edge sets are orders of magnitude smaller than the corpus,
+  * so the common path collects the pair list once (bounded) and runs
+  * union-find on the driver. Past the driver limit the algorithm is
+  * iterative min-label propagation — each node adopts the minimum
+  * label in its neighborhood until fixpoint. Iterations are
   * O(diameter); near-dup clusters are small and dense, so this
-  * converges in 2-3 rounds. Each round = one join + one aggregate
-  * (all distributed; the driver only sees the 1-row convergence
-  * check). At extreme graph scale swap in large-star/small-star; the
+  * converges in 2-3 rounds. Each round = one join + one aggregate,
+  * all distributed; the driver sees one changed-label count per
+  * round. At extreme graph scale swap in large-star/small-star; the
   * surrounding contract is unchanged.
   */
 object Clusters {
@@ -23,13 +26,16 @@ object Clusters {
   /** @param pairs (a_id, b_id) near-dup edges
     * @param nodes one row per doc_id (isolated docs form their own
     *              singleton clusters)
-    * @param driverEdgeLimit when the edge count is at or below this,
-    *        union-find runs on the driver (near-dup edge sets are
-    *        orders of magnitude smaller than the corpus — even a
-    *        100 TB corpus typically yields millions of edges, which is
-    *        driver-trivial); above it, distributed min-label
-    *        propagation takes over. Only edges ever reach the driver,
-    *        never the corpus.
+    * @param driverEdgeLimit the pair set is collected to the driver in
+    *        ONE bounded collect of at most `driverEdgeLimit + 1` pairs
+    *        (capped at the largest JVM array); if it holds at most
+    *        `driverEdgeLimit`, union-find runs on those pairs (near-dup
+    *        edge sets are orders of magnitude smaller than the corpus —
+    *        even a 100 TB corpus typically yields millions of edges,
+    *        which is driver-trivial). Past it, the collected pairs are
+    *        dropped and distributed min-label propagation runs over the
+    *        mirrored edge frame instead. Only edges ever reach the
+    *        driver, never the corpus.
     * @return (doc_id, cluster_id) with cluster_id = min doc_id in the
     *         component
     */
@@ -37,23 +43,25 @@ object Clusters {
                           maxIters: Int = 20,
                           driverEdgeLimit: Long = 10L * 1000 * 1000): DataFrame = {
     val spark = nodes.sparkSession
-    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .cache()
-    val edgeCount = edges.count()
+    val directed = pairs.select(col("a_id").cast("long").as("src"),
+      col("b_id").cast("long").as("dst"))
+    val bound = math.min(math.max(driverEdgeLimit, 0L), Int.MaxValue - 1L).toInt
+    val collected = directed.limit(bound + 1).collect()
     val labels =
-      if (edgeCount <= driverEdgeLimit) driverUnionFind(spark, edges)
-      else propagateMinLabel(edges, maxIters)
-    edges.unpersist()
+      if (collected.length <= bound)
+        driverUnionFind(spark, collected.map(r => (r.getLong(0), r.getLong(1))))
+      else {
+        val edges = directed.union(directed.select(col("dst").as("src"), col("src").as("dst")))
+          .cache()
+        try propagateMinLabel(edges, maxIters) finally edges.unpersist()
+      }
     nodes.select(col("doc_id"))
       .join(labels.withColumnRenamed("cluster_id", "cc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cc_id"), col("doc_id")).as("cluster_id"))
   }
 
   /** Path-compressed union-find over a driver-collected edge list. */
-  private def driverUnionFind(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  private def driverUnionFind(spark: SparkSession, es: Array[(Long, Long)]): DataFrame = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -84,6 +92,8 @@ object Clusters {
     * truncates the lineage to the materialized blocks. Local (not
     * HDFS) checkpoint is the right trade here: the frame is loop
     * state that is rebuilt from the cached edges on executor loss.
+    * The returned frame is always an eager local checkpoint, so the
+    * caller may unpersist `edges` as soon as this returns.
     */
   private def propagateMinLabel(edges: DataFrame, maxIters: Int,
                                 checkpointEvery: Int = 3): DataFrame = {
@@ -107,7 +117,12 @@ object Clusters {
       converged = changes == 0
       i += 1
     }
-    labels.select(col("doc_id"), col("cluster_id"))
+    // the result outlives this call: hand it over as checkpointed
+    // blocks (freed by the ContextCleaner once unreachable), never as
+    // a cache entry the caller cannot unpersist
+    val out = labels.select(col("doc_id"), col("cluster_id")).localCheckpoint()
+    labels.unpersist()
+    out
   }
 
   /** d6: cluster the exact-Jaccard near-dup pairs and emit only docs

@@ -141,19 +141,25 @@ object Dedup {
       size(col("ids")).cast("string"),
       lit(s" $unit). $remedy"))).isNull)
 
-  /** Raw (un-valved) signature families — persisted ONCE per input
-    * plan and shared by both valve modes and any report consumer.
+  /** Signature families. Nothing is persisted: every consumer inside
+    * one pair plan (identical-sig pairs, banding, the signature joins)
+    * reads the SAME `hashpartitioning(sig)` exchange, which Spark
+    * computes once and re-reads as a `ReusedExchange` (plan-pinned in
+    * PlanShapeSpec). A JVM-global persist here would pin one entry per
+    * fresh input that nothing ever hits again.
     */
-  private def rawSigFamilies(tag: String, sigs: DataFrame): DataFrame =
-    graft.FrameCache.persisted(tag,
-      sigs.groupBy(col("sig"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"),
-          min(col("doc_id")).as("rep")))
-
-  private[graft] def sigFamilies(tag: String, sigs: DataFrame,
+  private[graft] def sigFamilies(sigs: DataFrame,
                                  maxFamily: Int = MaxFamilySize,
                                  skipOversized: Boolean = false): DataFrame =
-    valved(rawSigFamilies(tag, sigs), maxFamily, skipOversized,
+    valved(
+      sigs.groupBy(col("sig"))
+        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+        // rep = min id, read off the sorted ids rather than a min()
+        // aggregate: a consumer that prunes `rep` (identical-sig pairs)
+        // then still plans the same partial aggregate, so its exchange
+        // is reused instead of re-running the signature pass
+        .withColumn("rep", try_element_at(col("ids"), lit(1))),
+      maxFamily, skipOversized,
       "identical-signature family", "docs share one minhash signature",
       "Byte-identical mass at this scale is exact dedup's job — run " +
         "Dedup.exactDedup (d1) first, then minhash the surviving " +
@@ -208,7 +214,7 @@ object Dedup {
       .filter(size(col("sh")) > 0)
       .withColumn("sig", minhash_signature(col("sh"), numPerms))
       .select(col("doc_id"), col("sig"))
-    val fam = sigFamilies("lsh_sig_families", sigs, skipOversized = skipOversized)
+    val fam = sigFamilies(sigs, skipOversized = skipOversized)
     val banded = fam
       .select(col("rep").as("doc_id"), col("sig"),
         explode(sequence(lit(0), lit(bands - 1))).as("band"))
@@ -239,9 +245,8 @@ object Dedup {
     * pays sixteen of.
     * Round 9: rides the identity-collapsed [[sigFamilies]] frame
     * (banding and pair formation over DISTINCT signatures; member
-    * fan-out output-bound) — the duplicated-corpus detonation guard —
-    * which also makes the signature frame the persisted artifact the
-    * production note below always promised (FrameCache-bounded).
+    * fan-out output-bound) — the duplicated-corpus detonation guard;
+    * the family frame's one sig-keyed exchange feeds every consumer.
     * A 64-bit bucket collision can only ADD a candidate (scoring
     * uses the full signatures, and the threshold filter is the
     * same), never change a verdict. Spec-proven pair-identical to
@@ -259,7 +264,7 @@ object Dedup {
     // formation run on DISTINCT signatures; the family frame also
     // carries the member ids both signature joins need, so the
     // fan-out costs no extra join
-    val fam = sigFamilies("lsh_sig_families", sigs, skipOversized = skipOversized)
+    val fam = sigFamilies(sigs, skipOversized = skipOversized)
     val banded = fam
       .select(col("rep").as("doc_id"),
         explode(sequence(lit(0), lit(bands - 1))).as("band"), col("sig"))

@@ -681,29 +681,19 @@ object Curation {
       .orderBy(col("doc_id"))
 
   /** Shared head of the curation chain: normalize → score → quality
-    * filter → exact-dedup keep-min-id.
+    * filter → exact-dedup keep-min-id. The keep id is a window min
+    * over the content hash, so the scan and the scoring run once (a
+    * groupBy joined back to the scored frame would plan them twice).
+    * A null-id row never equals its group's min and drops; null texts
+    * hash to one null group.
     */
-  private[graft] def scoreAndExactDedup(docs: DataFrame, minScore: Double): DataFrame = {
-    val scored = TextAnalysis.qualityScore(
-      docs.withColumn("text", normalizeRedact(col("text"))))
+  private[graft] def scoreAndExactDedup(docs: DataFrame, minScore: Double): DataFrame =
+    TextAnalysis.qualityScore(docs.withColumn("text", normalizeRedact(col("text"))))
       .filter(col("quality_score") >= minScore)
-    val keepIds = scored
-      .groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    scored.join(keepIds, "doc_id")
-  }
+      .withColumn("__keep_id", min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
+      .filter(col("doc_id") === col("__keep_id"))
+      .drop("__keep_id")
 
-  /** x4b: the full production curation chain — x4 plus NEAR-dup
-    * clustering between scoring and capping: minhash-LSH pairs over
-    * the normalized surviving text (one signature pass, one bucket
-    * shuffle — [[graft.dedup.Dedup.minhashLshPairs]]), connected
-    * components over the pair graph, keep-min-id per cluster, THEN
-    * the per-source cap. Exact dedup alone misses boilerplate
-    * rewrites; this is the chain a pretraining corpus actually runs,
-    * and every stage stays the scale shape its standalone entry
-    * proved (the pair stage is banded LSH, never all-pairs).
-    */
   /** Cross-call survivor-set cache, keyed like the IVF centroid
     * registry: bounded by distinct (key, minScore) pairs per JVM, and
     * reusable across repeated invocations on the same corpus. Keyed
@@ -717,6 +707,17 @@ object Curation {
   private val survivorCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Double), DataFrame]()
 
+  /** x4b: the full production curation chain — x4 plus NEAR-dup
+    * clustering between scoring and capping: minhash-LSH pairs over
+    * the normalized surviving text (one signature pass, a
+    * signature-free bucket shuffle —
+    * [[graft.dedup.Dedup.minhashLshPairsJoinback]]), connected
+    * components over the pair graph, keep-min-id per cluster, THEN
+    * the per-source cap. Exact dedup alone misses boilerplate
+    * rewrites; this is the chain a pretraining corpus actually runs,
+    * and every stage stays the scale shape its standalone entry
+    * proved (the pair stage is banded LSH, never all-pairs).
+    */
   def curateNearDup(docs: DataFrame, minScore: Double = 0.5,
                     cap: Int = 20, cacheKey: Option[String] = None): DataFrame = {
     // the survivor set feeds three consumers (pair generation, the

@@ -130,6 +130,44 @@ class CurationSpec extends GraftSpecBase {
     assert(cc.forall(_._2 == 0L), s"all labels must reach min id 0: ${cc.toSeq.sorted}")
   }
 
+  test("connectedComponents under the driver limit starts no more Spark jobs than one bounded collect of its pair frame") {
+    // the pair set goes to the driver anyway: one bounded collect, no
+    // mirrored union, no cache, no separate count. Spark's bounded
+    // collect (CollectLimit) scans partitions incrementally — one, then
+    // up to four times as many — so on a multi-partition frame it may
+    // start a job or two more than a plain collect; both are reported
+    val limit = 10L * 1000 * 1000
+    val docs = Tables.documents(spark, sf)
+    val lsh = dedup.Dedup.minhashLshPairsJoinback(docs).select("a_id", "b_id")
+    val spread = spark.range(0L, 400L, 1L, 4)
+      .select(col("id").as("a_id"), (col("id") + 1).as("b_id"))
+    for ((name, pairs) <- Seq("LSH pairs" -> lsh, "4-partition chain" -> spread)) {
+      val plain = jobsStarted(pairs.collect())
+      val bounded = jobsStarted(pairs.limit(limit.toInt + 1).collect())
+      val cc = jobsStarted(dedup.Clusters.connectedComponents(docs.select("doc_id"), pairs,
+        driverEdgeLimit = limit))
+      info(s"$name: collect $plain jobs, bounded collect $bounded, connectedComponents $cc")
+      assert(cc <= bounded,
+        s"$name: connectedComponents started $cc jobs where one bounded collect of its pairs starts $bounded")
+    }
+  }
+
+  test("over-limit components and un-keyed curateNearDup leave no cache entry behind") {
+    // numCachedEntries is sql-private in Scala, public in bytecode
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def entries: Int = cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+    def leftBehind(body: => Unit): Int = { val before = entries; body; entries - before }
+    val nodes = (1L to 8L).toDF("doc_id")
+    val ccLeft = Seq(Seq((1L, 2L)), Seq((1L, 2L), (2L, 3L), (5L, 6L))).map { pairs =>
+      pairs -> leftBehind(dedup.Clusters.connectedComponents(nodes, pairs.toDF("a_id", "b_id"),
+        driverEdgeLimit = 0).collect())
+    }
+    val curateLeft = leftBehind(text.Curation.curateNearDup(Tables.documents(spark, sf)).collect())
+    assert(ccLeft.forall(_._2 == 0) && curateLeft == 0,
+      s"new cache entries: distributed components $ccLeft, curateNearDup(cacheKey = None) $curateLeft")
+  }
+
   test("x8 hash split: exhaustive, disjoint, ratio-plausible, repartition-invariant") {
     val docs = Tables.documents(spark, sf).select("doc_id")
     val split = text.Curation.hashSplit(docs, "doc_id")

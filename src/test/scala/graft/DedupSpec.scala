@@ -846,13 +846,13 @@ class DedupSpec extends GraftSpecBase {
     val sigs = spark.range(1000001L)
       .select(col("id").as("doc_id"), array(lit(7), lit(7)).as("sig"))
     val ex = intercept[Throwable] {
-      dedup.Dedup.sigFamilies("valve_1m_hot", sigs.toDF()).collect()
+      dedup.Dedup.sigFamilies(sigs.toDF()).collect()
     }
     def chain(t: Throwable): String =
       if (t == null) "" else s"${t.getMessage} | ${chain(t.getCause)}"
     assert(chain(ex).contains("maxFamily=1000000"),
       s"default strict cap must fire at 1000001: ${chain(ex)}")
-    val reported = dedup.Dedup.sigFamilies("valve_1m_hot", sigs.toDF(),
+    val reported = dedup.Dedup.sigFamilies(sigs.toDF(),
       skipOversized = true).count()
     assert(reported == 0L, "report mode must drop the oversized family and complete")
     // text path end to end: the oversized family is skipped by the
@@ -909,7 +909,7 @@ class DedupSpec extends GraftSpecBase {
       Seq((50L, Seq(1, 2, 3)), (60L, Seq(4, 5, 6))))
       .toDF("doc_id", "sig")
     val ex = intercept[Throwable] {
-      dedup.Dedup.sigFamilies("valve_spec_hot", sigs, maxFamily = 4).collect()
+      dedup.Dedup.sigFamilies(sigs, maxFamily = 4).collect()
     }
     def chain(t: Throwable): String =
       if (t == null) "" else s"${t.getMessage} | ${chain(t.getCause)}"
@@ -918,7 +918,7 @@ class DedupSpec extends GraftSpecBase {
     assert(m.contains("6 docs"), s"valve must state the family size: $m")
     assert(m.contains("exactDedup"), s"valve must point at the d1 remedy: $m")
     // below the cap the valve is a no-op: 3 families, reps = min ids
-    val ok = dedup.Dedup.sigFamilies("valve_spec_ok", sigs, maxFamily = 6)
+    val ok = dedup.Dedup.sigFamilies(sigs, maxFamily = 6)
       .collect().map(r => r.getLong(2) -> r.getSeq[Long](1).sorted).toMap
     assert(ok == Map(1L -> (1L to 6L), 50L -> Seq(50L), 60L -> Seq(60L)),
       s"families must collapse exactly on signature identity: $ok")

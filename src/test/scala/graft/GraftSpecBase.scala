@@ -9,6 +9,39 @@ import org.scalatest.funsuite.AnyFunSuite
 trait GraftSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSpecBase.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Number of Spark jobs `body` starts on this thread, read from a
+    * SparkListener. A sentinel job in its own group runs afterwards:
+    * the listener queue is FIFO, so once the sentinel's start arrives
+    * every job event of `body` has been delivered too.
+    */
+  def jobsStarted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(g) if g == s"$group-sentinel" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener never caught up")
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object GraftSpecBase {

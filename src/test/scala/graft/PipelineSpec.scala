@@ -152,39 +152,6 @@ class PipelineSpec extends GraftSpecBase {
     }
   }
 
-  /** Number of Spark jobs `body` starts on this thread, read from a
-    * SparkListener. A sentinel job in its own group runs afterwards:
-    * the listener queue is FIFO, so once the sentinel's start arrives
-    * every job event of `body` has been delivered too.
-    */
-  private def jobsStarted(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID}"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(g) if g == s"$group-sentinel" => flushed.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(s"$group-sentinel", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener never caught up")
-      started.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("runSuite costs no more Spark jobs than a plain count and returns rows in check_name order") {
     val dir = java.nio.file.Files.createTempDirectory("graft_checks").toString
     (0 until 8000).map(i => (i.toLong, s"w${i % 96}", (i % 101) / 100.0))

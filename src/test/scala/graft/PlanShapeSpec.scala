@@ -766,10 +766,23 @@ class PlanShapeSpec extends GraftSpecBase {
     // the wire ONCE (vs `bands`× in a signature-carrying band shuffle,
     // and vs B²·bands× on a duplicated corpus, the d23-at-50×
     // detonation). Everything downstream — banding, bucket pairing,
-    // pair dedup, member fan-out — must key on narrow longs. The
-    // FrameCache'd collapse build is re-printed per cache read, so the
-    // pin whitelists exchange KEYS instead of counting exchanges.
+    // pair dedup, member fan-out — must key on narrow longs; the pin
+    // whitelists exchange KEYS.
     val plan = finalPlan(dedup.Dedup.minhashLshPairsJoinback(Tables.documents(spark, sf)))
+    // the family frame is not persisted: its four consumers
+    // (identical-sig pairs, banding, both signature joins) share ONE
+    // computed sig exchange, every other use a ReusedExchange (whose
+    // plan line echoes the referenced exchange — count lines).
+    // Without the reuse the signature pass would run once per consumer.
+    val lines = plan.linesIterator.toSeq
+    val sigComputed = lines.count(l =>
+      l.contains("Exchange hashpartitioning(sig") && !l.contains("ReusedExchange"))
+    val sigReused = lines.count(l =>
+      l.contains("ReusedExchange") && l.contains("hashpartitioning(sig"))
+    assert(sigComputed == 1, s"the sig exchange must be computed once, got $sigComputed:\n$plan")
+    assert(sigReused >= 1, s"the other family consumers must reuse the sig exchange:\n$plan")
+    val sigPasses = lines.count(_.contains("minhash_signature("))
+    assert(sigPasses == 1, s"the signature pass must run once, got $sigPasses:\n$plan")
     assert(!plan.contains("hashpartitioning(band_sig"),
       s"band shuffle must be signature-free:\n$plan")
     assert(!plan.contains("hashpartitioning(sa") &&
