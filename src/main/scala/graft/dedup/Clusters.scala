@@ -90,10 +90,12 @@ object Clusters {
     * (long-diameter graphs past the driver limit) planning and task
     * serialization cost grows linearly with rounds — checkpointing
     * truncates the lineage to the materialized blocks. Local (not
-    * HDFS) checkpoint is the right trade here: the frame is loop
-    * state that is rebuilt from the cached edges on executor loss.
-    * The returned frame is always an eager local checkpoint, so the
-    * caller may unpersist `edges` as soon as this returns.
+    * HDFS) checkpoint trades fault tolerance for speed: the blocks
+    * live only in executor storage and the lineage is gone, so losing
+    * an executor that holds them fails the job rather than recomputing
+    * the loop state from the edges. The returned frame is always an
+    * eager local checkpoint, so the caller may unpersist `edges` as
+    * soon as this returns.
     */
   private def propagateMinLabel(edges: DataFrame, maxIters: Int,
                                 checkpointEvery: Int = 3): DataFrame = {

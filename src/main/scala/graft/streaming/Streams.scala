@@ -103,30 +103,36 @@ object Streams {
     * per-partition transactions never contend.
     *
     * Re-running the same batch is a no-op by construction — the
-    * exactly-once property JdbcSpec pins. The zero-row append before
-    * the upsert creates the table from the batch schema on first
-    * contact (Spark's own JDBC DDL path), so the writer works against
-    * an empty database.
+    * exactly-once property JdbcSpec pins. The table is created once
+    * per writer: its first batch runs a zero-row append, which
+    * creates the table from the batch schema if it is missing
+    * (Spark's own JDBC DDL path), so the writer works against an
+    * empty database. Later batches skip it, as that append costs a
+    * Spark job and a metadata round trip every micro-batch.
     */
   def jdbcUpsertWriter(url: String, table: String, keyCols: Seq[String],
                        user: String, password: String,
-                       driver: String = "org.postgresql.Driver"): (DataFrame, Long) => Unit =
+                       driver: String = "org.postgresql.Driver"): (DataFrame, Long) => Unit = {
+    @volatile var created = false
     (batch: DataFrame, _: Long) => {
       val cols = batch.schema.fieldNames.toSeq
       require(keyCols.nonEmpty && keyCols.forall(cols.contains),
         s"key columns $keyCols must all exist in ${cols.mkString(",")}")
-      // string KEY columns must be created as VARCHAR, not the
-      // dialect's default LOB (Derby maps StringType → CLOB, which
-      // cannot sit in an equality predicate)
-      val keyVarchars = keyCols
-        .filter(k => batch.schema(k).dataType == org.apache.spark.sql.types.StringType)
-        .map(k => s"$k VARCHAR(512)")
-      val create = batch.limit(0).write.format("jdbc").mode("append")
-        .option("url", url).option("user", user).option("password", password)
-        .option("dbtable", table).option("driver", driver)
-      (if (keyVarchars.nonEmpty)
-        create.option("createTableColumnTypes", keyVarchars.mkString(", "))
-      else create).save()
+      if (!created) {
+        // string KEY columns must be created as VARCHAR, not the
+        // dialect's default LOB (Derby maps StringType → CLOB, which
+        // cannot sit in an equality predicate)
+        val keyVarchars = keyCols
+          .filter(k => batch.schema(k).dataType == org.apache.spark.sql.types.StringType)
+          .map(k => s"$k VARCHAR(512)")
+        val create = batch.limit(0).write.format("jdbc").mode("append")
+          .option("url", url).option("user", user).option("password", password)
+          .option("dbtable", table).option("driver", driver)
+        (if (keyVarchars.nonEmpty)
+          create.option("createTableColumnTypes", keyVarchars.mkString(", "))
+        else create).save()
+        created = true
+      }
       // Spark's JDBC DDL path quotes column names (case-sensitive in
       // Derby/Postgres) — quote them here too or they fold to the
       // dialect's default case and miss
@@ -160,6 +166,7 @@ object Streams {
         }
       }
     }
+  }
 
   private val runCounter = new AtomicInteger(0)
 

@@ -11,34 +11,39 @@ trait GraftSpecBase extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
 
   /** Number of Spark jobs `body` starts on this thread, read from a
-    * SparkListener. A sentinel job in its own group runs afterwards:
-    * the listener queue is FIFO, so once the sentinel's start arrives
-    * every job event of `body` has been delivered too.
+    * SparkListener. The jobs are found by a job tag, not a job group,
+    * so `body` may run inside a streaming query's `foreachBatch`
+    * without replacing the query's own job group. A sentinel job with
+    * its own tag runs afterwards: the listener queue is FIFO, so once
+    * the sentinel's start arrives every job event of `body` has been
+    * delivered too.
     */
   def jobsStarted(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val tag = s"jobs-${java.util.UUID.randomUUID}"
+    val sentinel = s"$tag-sentinel"
     val started = new java.util.concurrent.atomic.AtomicInteger
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(g) if g == s"$group-sentinel" => flushed.countDown()
-          case _ => ()
-        }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSet).getOrElse(Set.empty)
+        if (tags(sentinel)) flushed.countDown()
+        else if (tags(tag)) started.incrementAndGet()
+      }
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "counted")
+      sc.addJobTag(tag)
       body
-      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      sc.addJobTag(sentinel)
       sc.parallelize(Seq(1), 1).count()
       assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener never caught up")
       started.get
     } finally {
-      sc.clearJobGroup()
+      sc.removeJobTag(tag)
+      sc.removeJobTag(sentinel)
       sc.removeSparkListener(listener)
     }
   }

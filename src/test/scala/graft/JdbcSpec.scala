@@ -112,6 +112,105 @@ class JdbcSpec extends GraftSpecBase {
       s"grain must be replaced in place: ${rows.toSeq}")
   }
 
+  test("upsert sink starts one Spark job per micro-batch from the second batch on") {
+    // the zero-row append that creates the table is a Spark job of its
+    // own; run every batch it doubled the sink's jobs
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val upUrl = "jdbc:derby:memory:graftjobs;create=true"
+    val writer = streaming.Streams.jdbcUpsertWriter(upUrl, "gold_jobs",
+      keyCols = Seq("station_id"), user = "", password = "", driver = driver)
+    val checkpoint = java.nio.file.Files.createTempDirectory("graft_jobs_ck").toString
+    val mem = MemoryStream[(String, Double)]
+    val agg = mem.toDF().toDF("station_id", "v")
+      .groupBy(col("station_id")).agg(sum(col("v")).as("total"))
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    val q = streaming.Streams.foreachBatchSink(agg, checkpoint) { (df, id) =>
+      jobs.put(id, jobsStarted(writer(df, id)))
+    }.start()
+    try Seq(Seq(("a", 1.0), ("b", 2.0)), Seq(("a", 3.0)), Seq(("c", 4.0), ("b", 1.0)))
+      .foreach { rows => mem.addData(rows: _*); q.processAllAvailable() }
+    finally q.stop()
+    val perBatch = (0L until 3L).map(id => id -> jobs.get(id))
+    info(s"jobs per batch: $perBatch")
+    assert(perBatch.tail.forall(_._2 == 1), s"one job per batch after the first: $perBatch")
+  }
+
+  test("upsert sink restarts from its local checkpoint without replay; file: checkpoints go through the FileSystem API") {
+    import java.nio.file.{Files, StandardCopyOption}
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    import org.apache.spark.sql.types._
+
+    // routing: the graft session sends file: checkpoints to the
+    // FileSystem-API manager and any other scheme to Spark's default
+    val key = streaming.LocalCheckpointFileManager.ConfKey
+    val hc = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    hc.set(key, spark.conf.get(key))
+    val sparkDefault = new org.apache.hadoop.conf.Configuration(hc)
+    sparkDefault.unset(key)
+    def resolved(p: String): CheckpointFileManager = CheckpointFileManager.create(new Path(p), hc) match {
+      case m: streaming.LocalCheckpointFileManager => m.delegate
+      case m => fail(s"$p resolved to ${m.getClass.getName}")
+    }
+    val checkpoint = Files.createTempDirectory("graft_restart_ck")
+    Seq(checkpoint.toString, checkpoint.toUri.toString).foreach { p =>
+      assert(resolved(p).isInstanceOf[FileSystemBasedCheckpointFileManager], p)
+      assert(!CheckpointFileManager.create(new Path(p), sparkDefault)
+        .isInstanceOf[FileSystemBasedCheckpointFileManager], s"Spark's default for $p")
+    }
+    // building an HDFS manager opens no connection
+    val remote = "hdfs://localhost:9/graft/ck"
+    assert(resolved(remote).getClass ==
+      CheckpointFileManager.create(new Path(remote), sparkDefault).getClass)
+    assert(!resolved(remote).isInstanceOf[FileSystemBasedCheckpointFileManager])
+
+    // restart: two batches, stop, restart on the same checkpoint
+    val upUrl = "jdbc:derby:memory:graftrestart;create=true"
+    val inDir = Files.createTempDirectory("graft_restart_in")
+    val stage = Files.createTempDirectory("graft_restart_stage")
+    val schema = StructType(Seq(StructField("station_id", StringType), StructField("v", DoubleType)))
+    var landed = 0
+    def land(rows: (String, Double)*): Unit = {
+      landed += 1
+      val f = stage.resolve(s"part-$landed.json")
+      Files.write(f, rows.map { case (k, v) => s"""{"station_id":"$k","v":$v}""" }
+        .mkString("\n").getBytes("UTF-8"))
+      Files.move(f, inDir.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
+    }
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Set[String])]()
+    def start(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val totals = streaming.Streams.fileStream(spark, inDir.toString, schema, format = "json")
+        .groupBy(col("station_id"))
+        .agg(round(sum(col("v")), 4).as("total"), count(lit(1)).as("n"))
+      val writer = streaming.Streams.jdbcUpsertWriter(upUrl, "gold_restart",
+        keyCols = Seq("station_id"), user = "", password = "", driver = driver)
+      streaming.Streams.foreachBatchSink(totals, checkpoint.toString) { (df, id) =>
+        val b = df.persist()
+        batches.add(id -> b.select("station_id").collect().map(_.getString(0)).toSet)
+        writer(b, id)
+        b.unpersist()
+      }.start()
+    }
+    val first = start()
+    try Seq(Seq(("a", 1.0), ("b", 2.0)), Seq(("a", 3.0), ("c", 5.0)))
+      .foreach { rows => land(rows: _*); first.processAllAvailable() }
+    finally first.stop()
+    val second = start()
+    try { land(("a", 0.5), ("d", 1.0)); second.processAllAvailable() }
+    finally second.stop()
+
+    import scala.jdk.CollectionConverters._
+    assert(batches.asScala.toSeq == Seq(0L -> Set("a", "b"), 1L -> Set("a", "c"), 2L -> Set("a", "d")),
+      "the restarted query continues at batch 2 and replays nothing")
+    val table = spark.read.format("jdbc")
+      .option("url", upUrl).option("dbtable", "gold_restart").option("driver", driver)
+      .load().orderBy(col("station_id"))
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSeq
+    assert(table == Seq(("a", 4.5, 3L), ("b", 2.0, 1L), ("c", 5.0, 1L), ("d", 1.0, 1L)),
+      s"running totals carry across the restart: $table")
+  }
+
   test("postgres dialect canary: real upsert round-trip the day a driver + server land (auto-skips offline)") {
     // The reference's gold sink is Postgres (spark_streaming_job.py:
     // 124-140); offline this environment ships neither the pgjdbc jar
