@@ -847,29 +847,35 @@ object Queries {
   }
 
   /** Multi-cut banded rank: each (band, order, out) triple adds a
-    * global-rank column. The input is FrameCache-persisted ONCE and
-    * every offsets branch reads the PERSISTED frame (the
-    * multi-consumer law — d4's pair set, a47's edges): the r13
+    * global-rank column. Every offsets branch derives from the SAME
+    * input frame `df`, not from the previous cut's output: the r13
     * spelling nested the helpers and let each level's offsets branch
     * re-derive its whole input subtree, which at a35's three nested
     * cuts exploded the physical plan to 62 parquet scans of the fact
-    * (this round's forced-banded plan dump) — a flat ~6 s at any
-    * local factor and 27 corpus-scale aggregations at 100 TB. Now:
-    * ONE fact aggregation populates the cache; each cut costs one
-    * bounded offsets branch over the persisted frame plus one
-    * band-partitioned window on the main chain.
+    * — a flat ~6 s at any local factor and 27 corpus-scale
+    * aggregations at 100 TB. Now every cut's per-band counts come
+    * from ONE branch that explodes (cut, band) pairs: it references
+    * every band's input columns, so column pruning leaves `df`'s plan
+    * as the main chain has it, and Spark computes `df`'s exchange once
+    * and re-reads it as a `ReusedExchange` (a per-cut count would
+    * prune `df` to that band's columns and re-derive it). Each cut
+    * costs one bounded offsets branch plus one band-partitioned window
+    * on the main chain. Nothing is persisted, so a second call
+    * recomputes.
     */
   private[graft] def bandedRowNumbers(df: DataFrame,
       cuts: Seq[(Column, Seq[Column], String)],
       sbandWidth: Long = OffsetsBandWidth): DataFrame = {
-    val in = graft.FrameCache.persisted(
-      "banded_input_" + cuts.map(_._3).mkString("_"), df)
-    cuts.zipWithIndex.foldLeft(in: DataFrame) {
+    val perBand = df
+      .select(explode(array(cuts.zipWithIndex.map { case ((band, _, _), i) =>
+        struct(lit(i).as("cut"), band.as("band")) }: _*)).as("__cb"))
+      .groupBy(col("__cb.cut").as("__cut"), col("__cb.band").as("__band"))
+      .agg(count(lit(1)).as("__bval"))
+    cuts.zipWithIndex.foldLeft(df) {
       case (acc, ((band, order, out), i)) =>
         val bc = s"__band$i"
         val offsets = prefixOffsets(
-          in.withColumn("__band", band).groupBy(col("__band"))
-            .agg(count(lit(1)).as("__bval")), sbandWidth)
+          perBand.filter(col("__cut") === i).drop("__cut"), sbandWidth)
           .withColumnRenamed("__band", bc)
         acc.withColumn(bc, band)
           .join(broadcast(offsets), Seq(bc))
@@ -887,17 +893,18 @@ object Queries {
   /** [[bandedRowNumbers]]'s running-sum flavor (Intervals.runningFromNets'
     * offsets law on a value order): per-band sum prefixes broadcast
     * back, within-band running sum + offset = the global running sum.
-    * Same persisted-input law as the rank flavor.
+    * Nothing is persisted: the offsets branch re-reads `df` within the
+    * one returned plan, and Spark reuses `df`'s exchange where both
+    * reads keep the same columns (a36's two-column frame does).
     */
   private[graft] def bandedRunningSum(df: DataFrame, band: Column,
                                order: Seq[Column], value: Column,
                                out: String,
                                sbandWidth: Long = OffsetsBandWidth): DataFrame = {
-    val in = graft.FrameCache.persisted(s"banded_input_$out", df)
     val offsets = prefixOffsets(
-      in.withColumn("__band", band).groupBy(col("__band"))
+      df.withColumn("__band", band).groupBy(col("__band"))
         .agg(sum(value).as("__bval")), sbandWidth)
-    in.withColumn("__band", band)
+    df.withColumn("__band", band)
       .join(broadcast(offsets), Seq("__band"))
       .withColumn(out, col("__offset") +
         sum(value).over(Window.partitionBy(col("__band")).orderBy(order: _*)
@@ -964,13 +971,12 @@ object Queries {
             .cast("long"))
       else {
         // band = $1024-wide spend bucket, negated so ascending bands
-        // walk spend DESC; the per-customer aggregate is persisted
-        // ONCE (r14 — the multi-consumer law) and the n scalar, the
-        // offsets branch and the main chain all read the persisted
-        // frame instead of re-deriving the fact aggregate
-        val spendP = graft.FrameCache.persisted("a28_spend", spend)
-        val n = spendP.agg(count(lit(1)).as("__n"))
-        bandedRowNumber(spendP, expr("-floor(spend / 1024.0)"),
+        // walk spend DESC; the offsets branch and the main chain read
+        // the per-customer aggregate's one exchange (reused within the
+        // plan); the n scalar prunes that aggregate to its key, so it
+        // is one more narrow count over the fact
+        val n = spend.agg(count(lit(1)).as("__n"))
+        bandedRowNumber(spend, expr("-floor(spend / 1024.0)"),
           Seq(col("spend").desc, col("o_custkey")), "__rk")
           .crossJoin(broadcast(n))
           .withColumn("decile", ntileFromRank("__rk", "__n", 10).cast("long"))
@@ -1238,9 +1244,8 @@ object Queries {
           .withColumn("m_q", ntile(5).over(
             Window.orderBy(col("__cents").desc, col("o_custkey"))).cast("long"))
       else {
-        val custP = graft.FrameCache.persisted("a35_rfm_cust", cust)
-        val nCust = custP.agg(count(lit(1)).as("__n"))
-        bandedRowNumbers(custP, Seq(
+        val nCust = cust.agg(count(lit(1)).as("__n"))
+        bandedRowNumbers(cust, Seq(
           (col("recency_days"),
             Seq(col("recency_days"), col("o_custkey")), "__rk_r"),
           (negate(col("freq")),
@@ -1289,9 +1294,9 @@ object Queries {
     // bandedRunningSum (per-band sum prefixes + within-band running
     // sums) instead of a single-partition window — same 65536-cent
     // band as a35's monetary cut. Bit-identical either way. r14: the
-    // banded branch persists the per-customer frame once and derives
-    // the corpus total from it (sum of per-customer long sums — the
-    // same exact integer, no second fact pass).
+    // banded branch derives the corpus total from the per-customer
+    // frame (sum of per-customer long sums — the same exact integer,
+    // read off the reused per-customer exchange, no second fact pass).
     val (withCum, total) =
       if (!useBandedWindows(orders, bandedMinBytes))
         (cust.withColumn("__cum", sum(col("__cents")).over(
@@ -1300,10 +1305,9 @@ object Queries {
           orders.agg(
             sum(round(col("o_totalprice") * 100).cast("long")).as("__total")))
       else {
-        val custP = graft.FrameCache.persisted("a36_abc_cust", cust)
-        (bandedRunningSum(custP, expr("-(__cents div 65536)"),
+        (bandedRunningSum(cust, expr("-(__cents div 65536)"),
           Seq(col("__cents").desc, col("o_custkey")), col("__cents"), "__cum"),
-          custP.agg(sum(col("__cents")).as("__total")))
+          cust.agg(sum(col("__cents")).as("__total")))
       }
     withCum
       .crossJoin(broadcast(total))
@@ -1764,10 +1768,13 @@ object Queries {
     * (isolated) nodes keep the base term and leak their residual —
     * the unredistributed-dangling variant, stated, not hidden.
     *
-    * Scale shape: the edge list (+out-degree) is built once and
-    * persisted — it is the only corpus-derived input the loop
-    * touches; each round is ONE equi-join of ranks onto edges keyed
-    * by src (node-keyed shuffle) and ONE map-combined sum keyed by
+    * Scale shape: the edge list (+out-degree) is the only
+    * corpus-derived input the loop touches. It is not persisted:
+    * every round reads the same edge and node subtrees, whose
+    * exchanges Spark computes once and reuses across the rounds of
+    * the one returned plan (one events scan per call; a second call
+    * recomputes). Each round is ONE equi-join of ranks onto edges
+    * keyed by src (node-keyed shuffle) and ONE map-combined sum keyed by
     * dst, then a left join back to the node frame. Iterations chain
     * 3 such rounds in a single lazy plan; nothing driver-side, no
     * collect, rank frame stays |nodes|-sized throughout.
@@ -1787,10 +1794,9 @@ object Queries {
       .select(col("item").as("src"), col("item_v").as("dst")).distinct()
     val edges = und.unionByName(und.select(col("dst").as("src"), col("src").as("dst")))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // reused every iteration; bounded-cache persisted (ADVICE r8)
-    val edgesD = graft.FrameCache.persisted("a47_edges", edges.join(deg, Seq("src")))
-    val nodes = graft.FrameCache.persisted("a47_nodes",
-      capped.select(col("item")).distinct())
+    // read by every round; their exchanges are reused across rounds
+    val edgesD = edges.join(deg, Seq("src"))
+    val nodes = capped.select(col("item")).distinct()
     var rank = nodes.select(col("item"), lit(1000000000L).as("r"))
     for (_ <- 1 to iters) {
       val sums = edgesD

@@ -128,18 +128,16 @@ object Clusters {
   }
 
   /** d6: cluster the exact-Jaccard near-dup pairs and emit only docs
-    * in non-singleton clusters with their keep/drop verdict. Uses the
-    * SHARED persisted pair set (one pair computation feeds both d4
-    * and d6 — the pair query and its clustering consumer never pay
-    * for the pairs twice), and exact edges make the whole operator
-    * verifiable by the SQL oracle (transitive closure over the d4
-    * pair set). `connectedComponents` itself is edge-source-agnostic;
-    * minhash/simhash pair sets plug in unchanged.
+    * in non-singleton clusters with their keep/drop verdict. The pair
+    * set is d4's, computed for this call, and exact edges make the
+    * whole operator verifiable by the SQL oracle (transitive closure
+    * over the d4 pair set). `connectedComponents` itself is
+    * edge-source-agnostic; minhash/simhash pair sets plug in unchanged.
     */
   def d6(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val pairs = Dedup.cachedJaccardPairs(spark, dir)
-    val cc = connectedComponents(docs, pairs.select("a_id", "b_id"))
+    val corpus = Tables.documents(spark, dir)
+    val cc = connectedComponents(corpus.select(col("doc_id")),
+      Dedup.exactJaccardPairs(corpus).select("a_id", "b_id"))
     val sizes = cc.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "cluster_id")
       .filter(col("cluster_size") > 1)
@@ -157,7 +155,7 @@ object Clusters {
     * the choice is deterministic and the quality definition is the
     * SAME t1 every gate in the library uses.
     *
-    * Scale shape: cluster labels ride the shared persisted pair set
+    * Scale shape: cluster labels ride the given pair set
     * (union-find under the driver limit, min-label propagation
     * above); quality is a narrow one-pass map (t1's single custom
     * expression). The labeled corpus then shuffles ONCE on
@@ -183,10 +181,10 @@ object Clusters {
   }
 
   /** Verified entry (d17). Sort is oracle-determinism only. */
-  def d17(spark: SparkSession, dir: String): DataFrame =
-    bestRepDedup(Tables.documents(spark, dir),
-      Dedup.cachedJaccardPairs(spark, dir))
-      .orderBy(col("doc_id"))
+  def d17(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    bestRepDedup(docs, Dedup.exactJaccardPairs(docs)).orderBy(col("doc_id"))
+  }
 
   /** Cluster audit report (d18): one row per non-singleton near-dup
     * cluster — size, quality spread (t1 min/max/avg) and token-length
@@ -194,7 +192,7 @@ object Clusters {
     * BEFORE committing a d17 survivorship pass (a cluster whose
     * quality spread is wide is a scrape family worth d17; one whose
     * members are uniformly good may be a false merge worth a higher
-    * τ). Same shape as d17: shared pair set → labels, narrow t1
+    * τ). Same shape as d17: pair set → labels, narrow t1
     * decoration, ONE cluster_id agg shuffle.
     */
   def clusterReport(docs: DataFrame, pairs: DataFrame): DataFrame = {
@@ -219,8 +217,8 @@ object Clusters {
   }
 
   /** Verified entry (d18). Sort is oracle-determinism only. */
-  def d18(spark: SparkSession, dir: String): DataFrame =
-    clusterReport(Tables.documents(spark, dir),
-      Dedup.cachedJaccardPairs(spark, dir))
-      .orderBy(col("cluster_id"))
+  def d18(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    clusterReport(docs, Dedup.exactJaccardPairs(docs)).orderBy(col("cluster_id"))
+  }
 }

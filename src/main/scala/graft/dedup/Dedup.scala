@@ -331,14 +331,16 @@ object Dedup {
     * one; its in-row triangle expansion has the same B²/2 buffer
     * exposure the d2 valve guards).
     */
-  private[graft] def simFamilies(tag: String, sigs: DataFrame,
+  private[graft] def simFamilies(sigs: DataFrame,
                                  maxFamily: Int = MaxFamilySize,
                                  skipOversized: Boolean = false): DataFrame =
     valved(
-      graft.FrameCache.persisted(tag,
-        sigs.groupBy(col("sim"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("ids"),
-            min(col("doc_id")).as("rep"))),
+      sigs.groupBy(col("sim"))
+        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+        // rep = min id off the sorted ids, as in sigFamilies: every
+        // consumer then plans the same partial aggregate and shares
+        // one sim exchange
+        .withColumn("rep", try_element_at(col("ids"), lit(1))),
       maxFamily, skipOversized,
       "identical-signature family", "docs share one simhash signature",
       "Byte-identical mass at this scale is exact dedup's job — run " +
@@ -352,10 +354,9 @@ object Dedup {
       .withColumn("sim", simhash64(col("tok_hashes")))
       .select(col("doc_id"), col("sim"))
     // three consumers (identical-pair expansion, rep banding, member
-    // fan-out) share one persisted family frame — bounded via
-    // FrameCache, never a bare leak (ADVICE r8)
-    val families = simFamilies("d3_families", sigs,
-      skipOversized = skipOversized)
+    // fan-out) read one family frame; its sim exchange is computed once
+    // and reused within the returned plan
+    val families = simFamilies(sigs, skipOversized = skipOversized)
     val identical = families.filter(size(col("ids")) > 1)
       .select(explode(expr(
         """flatten(transform(ids, (a, i) ->
@@ -397,28 +398,28 @@ object Dedup {
     * oversized family is d1's AGGREGATE form (n_copies), because no
     * consumer wants 10¹⁵ enumerated identical pairs.
     */
-  private def rawTextFamilies(tag: String, docs: DataFrame,
-                              shingleN: Int = 3): DataFrame =
-    graft.FrameCache.persisted(tag,
-      Tables.spread(docs)
-        .filter(size(shingle_hashes(col("text"), shingleN)) > 0)
-        // sha2-256, not md5 (ADVICE r9): these families FABRICATE
-        // jaccard/containment = 1.0 pair scores and drop the losing
-        // text's postings, so the key must be collision-resistant —
-        // md5 chosen-prefix collisions are practical, and one forged
-        // collision here both emits false exact-dup pairs and hides a
-        // distinct text from the index. (d1's md5 stays: there a
-        // collision only miscounts copies, it invents no scores.)
-        .groupBy(sha2(col("text"), 256).as("__h"))
-        .agg(min(col("doc_id")).as("rep"),
-          sort_array(collect_list(col("doc_id"))).as("ids"),
-          first(col("text")).as("text")))
+  private def rawTextFamilies(docs: DataFrame, shingleN: Int = 3): DataFrame =
+    Tables.spread(docs)
+      .filter(size(shingle_hashes(col("text"), shingleN)) > 0)
+      // sha2-256, not md5 (ADVICE r9): these families FABRICATE
+      // jaccard/containment = 1.0 pair scores and drop the losing
+      // text's postings, so the key must be collision-resistant —
+      // md5 chosen-prefix collisions are practical, and one forged
+      // collision here both emits false exact-dup pairs and hides a
+      // distinct text from the index. (d1's md5 stays: there a
+      // collision only miscounts copies, it invents no scores.)
+      .groupBy(sha2(col("text"), 256).as("__h"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("ids"),
+        first(col("text")).as("text"))
+      // rep off the sorted ids (as in sigFamilies): a consumer that
+      // prunes `rep` then plans the same aggregate as one that keeps it
+      .withColumn("rep", try_element_at(col("ids"), lit(1)))
 
-  private[graft] def textFamilies(tag: String, docs: DataFrame,
+  private[graft] def textFamilies(docs: DataFrame,
                                   shingleN: Int = 3,
                                   maxFamily: Int = MaxFamilySize,
                                   skipOversized: Boolean = false): DataFrame =
-    valved(rawTextFamilies(tag, docs, shingleN), maxFamily, skipOversized,
+    valved(rawTextFamilies(docs, shingleN), maxFamily, skipOversized,
       "byte-identical text family", "copies of one text",
       "Enumerating this family's pairs is the wrong operation at this " +
         "duplication — use Dedup.exactDedup (d1), whose n_copies aggregate " +
@@ -427,37 +428,35 @@ object Dedup {
   /** The Report half of the text-family valve: families past
     * `maxFamily` as result rows (representative id + copy count) —
     * what the pair operators dropped when run with
-    * `skipOversized = true`. Reads the same persisted family frame,
-    * so pairing + reporting together cost one collapse pass.
+    * `skipOversized = true`. It builds the same family frame as the
+    * pair operators but shares nothing with them: reporting after
+    * pairing recomputes the collapse pass.
     */
   def oversizedTextFamilies(docs: DataFrame, shingleN: Int = 3,
                             maxFamily: Int = MaxFamilySize): DataFrame =
-    rawTextFamilies("d4_text_families", docs, shingleN)
+    rawTextFamilies(docs, shingleN)
       .filter(size(col("ids")) > maxFamily)
       .select(col("rep"), size(col("ids")).cast("long").as("n_copies"))
 
   /** Df-capped shingle postings over family representatives — the
-    * shared join currency of d4 and d11 (identical frame, so the
-    * FrameCache entry is shared across BOTH operators at equal
-    * maxDf). Persisted because the inverted-index self-join reads it
-    * twice and AQE does not reuse an exchange whose input is a cache
-    * stage (measured: the un-persisted spelling ran the shingle +
-    * window pass once per join side); the cached build's
-    * hashpartitioning(s) — required by the df window — satisfies the
-    * join's distribution on both sides, so consumers add no
-    * exchange. The df window rides that same exchange (d4's original
-    * single-shuffle argument, unchanged).
+    * join currency of d4 and d11. Nothing is persisted: the
+    * inverted-index self-join reads this frame on both sides, and
+    * Spark computes its `hashpartitioning(s)` exchange — required by
+    * the df window — once and re-reads it as a `ReusedExchange` on the
+    * other side (plan-pinned in PlanShapeSpec). That partitioning
+    * satisfies the join's distribution on both sides, so the join adds
+    * no exchange and the shingle pass runs once per call; d4 and d11
+    * each compute their own.
     */
   private def repPostings(fam: DataFrame, maxDf: Long): DataFrame =
-    graft.FrameCache.persisted("d4_rep_postings",
-      withShingleHashes(fam.select(col("rep").as("doc_id"), col("text")))
-        .select(col("doc_id"), col("sh"))
-        .withColumn("n", size(col("sh")))
-        .select(col("doc_id"), col("n"), explode(col("sh")).as("s"))
-        .withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("s")))
-        .filter(col("df") <= maxDf)
-        .select("doc_id", "n", "s"))
+    withShingleHashes(fam.select(col("rep").as("doc_id"), col("text")))
+      .select(col("doc_id"), col("sh"))
+      .withColumn("n", size(col("sh")))
+      .select(col("doc_id"), col("n"), explode(col("sh")).as("s"))
+      .withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("s")))
+      .filter(col("df") <= maxDf)
+      .select("doc_id", "n", "s")
 
   /** Triangle-expand each family's within-family pairs, attaching the
     * given literal score columns (identical texts: jaccard = 1,
@@ -511,12 +510,12 @@ object Dedup {
   def exactJaccardPairs(docs: DataFrame, threshold: Double = 0.5,
                         maxDf: Long = 1000L,
                         skipOversized: Boolean = false): DataFrame = {
-    val fam = textFamilies("d4_text_families", docs, skipOversized = skipOversized)
+    val fam = textFamilies(docs, skipOversized = skipOversized)
     val ex = repPostings(fam, maxDf)
     // shuffle-hash, not broadcast: at scale the posting stream can't
-    // broadcast; both sides read the SAME persisted posting frame
-    // (see repPostings), whose cached hashpartitioning(s) satisfies
-    // the join on both sides — the shingle pass runs ONCE.
+    // broadcast; both sides read the SAME posting exchange (see
+    // repPostings), whose hashpartitioning(s) satisfies the join on
+    // both sides — the shingle pass runs ONCE.
     val a = ex.hint("shuffle_hash").alias("a")
     val b = ex.hint("shuffle_hash").alias("b")
     val repPairs = a
@@ -558,7 +557,7 @@ object Dedup {
     // identity-collapse first (see textFamilies) — same economics as
     // d4: the posting join runs on distinct texts, the cap measures
     // boilerplate diversity, member fan-out is output-bound
-    val fam = textFamilies("d4_text_families", docs, skipOversized = skipOversized)
+    val fam = textFamilies(docs, skipOversized = skipOversized)
     val ex = repPostings(fam, maxDf)
     val a = ex.hint("shuffle_hash").alias("a")
     val b = ex.hint("shuffle_hash").alias("b")
@@ -633,20 +632,21 @@ object Dedup {
     * the embedding, keep a representative), because no consumer
     * wants 10¹⁵ enumerated identical pairs.
     */
-  private def rawVecFamilies(tag: String, emb: DataFrame): DataFrame =
-    graft.FrameCache.persisted(tag,
-      // vector-corpus contract (Tables.vectors): a null embedding is
-      // not a vector — it must not form a "family" of all failed rows
-      emb.select(col("vec_id"), col("embedding"))
-        .filter(col("embedding").isNotNull)
-        .groupBy(col("embedding"))
-        .agg(sort_array(collect_list(col("vec_id"))).as("ids"),
-          min(col("vec_id")).as("rep")))
+  private def rawVecFamilies(emb: DataFrame): DataFrame =
+    // vector-corpus contract (Tables.vectors): a null embedding is
+    // not a vector — it must not form a "family" of all failed rows
+    emb.select(col("vec_id"), col("embedding"))
+      .filter(col("embedding").isNotNull)
+      .groupBy(col("embedding"))
+      .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
+      // rep off the sorted ids (as in sigFamilies): a consumer that
+      // prunes `rep` then plans the same aggregate as one that keeps it
+      .withColumn("rep", try_element_at(col("ids"), lit(1)))
 
-  private[graft] def vecFamilies(tag: String, emb: DataFrame,
+  private[graft] def vecFamilies(emb: DataFrame,
                                  maxFamily: Int = MaxFamilySize,
                                  skipOversized: Boolean = false): DataFrame =
-    valved(rawVecFamilies(tag, emb), maxFamily, skipOversized,
+    valved(rawVecFamilies(emb), maxFamily, skipOversized,
       "byte-identical embedding family", "copies of one vector",
       "Enumerating this family's pairs is the wrong operation at this " +
         "duplication — exact-dedup the vectors first (group by the " +
@@ -657,7 +657,7 @@ object Dedup {
     */
   def oversizedVecFamilies(emb: DataFrame,
                            maxFamily: Int = MaxFamilySize): DataFrame =
-    rawVecFamilies("d5_vec_families", emb)
+    rawVecFamilies(emb)
       .filter(size(col("ids")) > maxFamily)
       .select(col("rep"), size(col("ids")).cast("long").as("n_copies"))
 
@@ -687,11 +687,11 @@ object Dedup {
     * partitioning dial: it fixes per-task group size (n/P vectors,
     * (n/P)² candidate pairs) and task count (P(P+1)/2 cells) instead
     * of letting a fixed P=8 collapse a 1000-executor cluster onto 36
-    * tasks. The count runs on the persisted family frame the join
-    * materializes anyway (FrameCache keys by canonicalized input
-    * plan, so no cross-corpus staleness and no extra scan at steady
-    * state); at the verified SFs (≤2k reps) the derivation lands on
-    * the floor 8 and the entry is bit-identical to the old default.
+    * tasks. The count is its own job over the family frame: it
+    * recomputes the collapse pass the pair join then runs again (one
+    * extra pass over the vectors per call, no cross-call state); at
+    * the verified SFs (≤2k reps) the derivation lands on the floor 8
+    * and the entry is bit-identical to the old default.
     */
   private[graft] def derivedGridP(fam: DataFrame,
                                   targetGroupSize: Int = 2048): Int = {
@@ -735,7 +735,7 @@ object Dedup {
   def embeddingNearDupsBlocked(emb: DataFrame, threshold: Double = 0.4,
                                gridP: Int = 0,
                                skipOversized: Boolean = false): DataFrame = {
-    val fam = vecFamilies("d5_vec_families", emb, skipOversized = skipOversized)
+    val fam = vecFamilies(emb, skipOversized = skipOversized)
     // <= 0 (the family default) derives P from the rep count; an
     // explicit positive value pins the grid (specs, A/B replays).
     val p = if (gridP > 0) gridP else derivedGridP(fam)
@@ -809,7 +809,7 @@ object Dedup {
   def embeddingNearDupsLsh(emb: DataFrame, threshold: Double = 0.4,
                            numPlanes: Int = 0, seed: Long = 42L,
                            skipOversized: Boolean = false): DataFrame = {
-    val fam = vecFamilies("d5_vec_families", emb, skipOversized = skipOversized)
+    val fam = vecFamilies(emb, skipOversized = skipOversized)
     // <= 0 (the family default) derives the plane count from the rep
     // count ([[derivedNumPlanes]]) so expected bucket size — and with
     // it the in-bucket candidate mass — stays bounded as the corpus
@@ -837,28 +837,6 @@ object Dedup {
   }
 
   // ---- Verified entry points ----
-
-  /** Near-dup pair sets are consumed by BOTH the pair query (d4) and
-    * the clustering query (d6); computing the pairs is the dominant
-    * cost, so the per-corpus result is persisted once and shared —
-    * exactly what a real pipeline stage does (materialize the pair
-    * set, feed every consumer).
-    */
-  private val jaccardPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def cachedJaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    jaccardPairsCache.computeIfAbsent(dir,
-      // repartition before persist: the collapse-first union's lineage
-      // concatenates its branches' partitions (128 cached splits of a
-      // ~5k-pair frame at sf0.1), and every consumer then pays the
-      // task-schedule overhead per action — measured 2.5× on d6's warm
-      // pass. A materialization boundary is where layout is CHOSEN
-      // (same rule as compaction's sized files); one build-time
-      // round-robin exchange, every consumer reads
-      // spark.sql.shuffle.partitions splits.
-      _ => exactJaccardPairs(Tables.documents(spark, dir))
-        .repartition(spark.sessionState.conf.numShufflePartitions).persist())
 
   /** "Fuzzy-exact" dedup (d13): d1's keep-min-id grouping keyed on
     * t3's order-insensitive fingerprint (md5 of the sorted distinct
@@ -890,7 +868,7 @@ object Dedup {
     simhashPairs(Tables.documents(spark, dir)).orderBy(col("a_id"), col("b_id"))
 
   def d4(spark: SparkSession, dir: String): DataFrame =
-    cachedJaccardPairs(spark, dir).orderBy(col("a_id"), col("b_id"))
+    exactJaccardPairs(Tables.documents(spark, dir)).orderBy(col("a_id"), col("b_id"))
 
   /** Dedup-threshold sweep (d19): for a ladder of jaccard cutoffs
     * above the pair set's floor, how many near-dup pairs survive,
@@ -900,8 +878,8 @@ object Dedup {
     * boilerplate; this shows the trade per rung BEFORE a d6/d17 pass
     * commits). A rung with zero surviving pairs emits no row.
     *
-    * Scale shape: rides the SHARED persisted d4 pair set (computed
-    * once per corpus, LSH/df-bounded — never re-pairs the corpus);
+    * Scale shape: rides the d4 pair set it is given (df-bounded;
+    * the entry computes it, so each call pays one pair pass);
     * the rung fan-out is a narrow ≤|ladder|× explode of that bounded
     * frame, pair and doc counts are two tiny-key aggs joined on the
     * rung, and the corpus appears only as a 1-row count broadcast
@@ -928,9 +906,11 @@ object Dedup {
   }
 
   /** Verified entry (d19). Sort is oracle-determinism only. */
-  def d19(spark: SparkSession, dir: String): DataFrame =
-    thresholdSweep(cachedJaccardPairs(spark, dir), Tables.documents(spark, dir))
+  def d19(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    thresholdSweep(exactJaccardPairs(docs), docs)
       .orderBy(col("threshold"))
+  }
 
   /** Boilerplate-shingle report (d20): the top-K most widely shared
     * word 3-grams with their document frequency and corpus coverage
@@ -1005,9 +985,11 @@ object Dedup {
   }
 
   /** Verified entry (d21). Sort is oracle-determinism only. */
-  def d21(spark: SparkSession, dir: String): DataFrame =
-    dedupSavings(cachedJaccardPairs(spark, dir), Tables.documents(spark, dir))
+  def d21(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    dedupSavings(exactJaccardPairs(docs), docs)
       .orderBy(col("threshold"))
+  }
 
   def d5(spark: SparkSession, dir: String): DataFrame =
     embeddingNearDupsBlocked(Tables.embeddings(spark, dir)).orderBy(col("a_id"), col("b_id"))
@@ -1022,8 +1004,8 @@ object Dedup {
     * and B→A fold together; `n_pairs` = near-dup pairs bridging the
     * two, `n_docs` = distinct docs involved on either side.
     *
-    * Scale shape: rides the SHARED persisted d4 pair set (already
-    * bounded = actual near-dups, orders of magnitude under the
+    * Scale shape: rides the d4 pair set it is given (bounded =
+    * actual near-dups, orders of magnitude under the
     * corpus), which joins into the documents table twice for source
     * decoration — no hard hint: the pair set grows with the corpus
     * dup rate, so the broadcast choice is left to the size estimate
@@ -1050,9 +1032,11 @@ object Dedup {
         countDistinct(col("doc_id")).as("n_docs"))
   }
 
-  def d14(spark: SparkSession, dir: String): DataFrame =
-    crossSourceDupes(cachedJaccardPairs(spark, dir), Tables.documents(spark, dir))
+  def d14(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    crossSourceDupes(exactJaccardPairs(docs), docs)
       .orderBy(col("source_a"), col("source_b"))
+  }
 
   /** MinHash calibration gate (d15): every candidate pair the banded
     * LSH emits, scored BOTH ways — the 128-perm signature estimate
@@ -1091,19 +1075,19 @@ object Dedup {
     // per-copy spelling: signatures are functions of the text, so
     // rep-level banding sees the same distinct-signature population
     // (DedupSpec pins this on a duplicated fixture). The family
-    // frame is the same cached textFamilies d4/d11 ride.
+    // frame comes from the same textFamilies builder d4/d11 use.
     // skipOversized threads through BOTH family valves (ADVICE r10:
     // calibration was the one pair operator without the report-mode
     // escape hatch, so a >MaxFamilySize byte-identical family made
     // the corpus uncalibratable in any mode)
-    val fam = textFamilies("d4_text_families", docs, skipOversized = skipOversized)
+    val fam = textFamilies(docs, skipOversized = skipOversized)
     val repDocs = fam.select(col("rep").as("doc_id"), col("text"))
-    // r14 note (VERDICT r13 item 3, measured and REJECTED): persisting
-    // this two-consumer frame via FrameCache moved the warm wall
-    // nowhere (1.23→1.20 s standalone, commit c7ecb30) and cost ~1 s
-    // of cold materialization — the shingle recompute is NOT the
-    // entry's wall, the pair machinery is (now on the joinback
-    // banding).
+    // repDocs feeds two consumers (the LSH candidates and the exact
+    // re-score's set frame) inside this one plan and is not persisted:
+    // a persisted spelling was measured and rejected (warm wall
+    // 1.23→1.20 s standalone, commit c7ecb30, for ~1 s of cold
+    // materialization) — the shingle recompute is NOT the entry's
+    // wall, the pair machinery is (now on the joinback banding).
     val sets = withShingleHashes(repDocs).filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"))
     // r14: the JOINBACK banding (d2b, the 100 TB spelling — band rows
@@ -1145,8 +1129,8 @@ object Dedup {
     * a heavy tail here means boilerplate families, not pairwise
     * copies, and d6 clustering is the right tool).
     *
-    * Scale shape: degrees derive from the SHARED persisted d4 pair
-    * set (bounded = actual near-dups), so the degree frame is at
+    * Scale shape: degrees derive from the d4 pair set it is given
+    * (bounded = actual near-dups), so the degree frame is at
     * most 2|pairs| rows and rides a LEFT join the corpus streams
     * through to keep the degree-0 population — no hard hint, the
     * degree frame scales with the dup rate (a2's contract: size
@@ -1166,9 +1150,11 @@ object Dedup {
   }
 
   /** Verified entry (d16). Sort is oracle-determinism only. */
-  def d16(spark: SparkSession, dir: String): DataFrame =
-    dupDegreeHistogram(cachedJaccardPairs(spark, dir), Tables.documents(spark, dir))
+  def d16(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    dupDegreeHistogram(exactJaccardPairs(docs), docs)
       .orderBy(col("degree"))
+  }
 
   /** Shingle document-frequency profile (d22): how shingle DF mass
     * distributes across a bucket ladder — the evidence table behind

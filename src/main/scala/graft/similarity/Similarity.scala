@@ -1033,9 +1033,12 @@ object Similarity {
     * each candidate's CELL RANK in the query's probe order, and a
     * candidate's own cell appears at exactly one position, so the
     * scan mass is one q×corpus pass (vs Σ rungs ≈ 2× before) with no
-    * dedup exchange. Each rung is then a `cell_rank <= np` prefix
-    * filter + row_number window over the PERSISTED narrow scored
-    * frame (q_id, n_id, cell_rank, cos) — identical candidates,
+    * dedup exchange. Each scored row (q_id, n_id, cell_rank, cos) is
+    * then exploded to the rungs whose prefix holds it (`cell_rank <=
+    * np`) and ONE row_number window keyed on (q_id, nprobe) ranks
+    * every rung at once, so all rungs share one scoring pass and one
+    * window exchange (the exact side scores a second time; nothing is
+    * persisted) — identical candidates,
     * ordering, and ties as the per-rung [[ivfKnn]] spelling it
     * replaces (spec-pinned). When the ladder tops out at numCells
     * the full-prefix window IS the exact baseline (the all-cells
@@ -1060,23 +1063,26 @@ object Similarity {
         (col("pos") + 1).as("cell_rank"), col("col").as("cell_id"))
     // score before any exchange (s27's lesson): the window shuffles
     // below carry only (q_id, n_id, cell_rank, cos), never embeddings
-    val scored = graft.FrameCache.persisted("s20_scored",
-      broadcast(q).join(c, Seq("cell_id"))
-        .filter(col("q_id") =!= col("n_id"))
-        .withColumn("cos", cosine_sim(col("q_emb"), col("n_emb")))
-        .select(col("q_id"), col("n_id"), col("cell_rank"), col("cos")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    def topk(cands: DataFrame): DataFrame = cands
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"))
+    val scored = broadcast(q).join(c, Seq("cell_id"))
+      .filter(col("q_id") =!= col("n_id"))
+      .withColumn("cos", cosine_sim(col("q_emb"), col("n_emb")))
+      .select(col("q_id"), col("n_id"), col("cell_rank"), col("cos"))
+    val byCos = Seq(col("cos").desc, col("n_id"))
     val exact =
-      if (ladder.max >= kCells) topk(scored) // all-cells prefix = brute force
+      if (ladder.max >= kCells) // all-cells prefix = brute force
+        scored.withColumn("rank", row_number().over(
+            Window.partitionBy(col("q_id")).orderBy(byCos: _*)))
+          .filter(col("rank") <= k)
+          .select(col("q_id"), col("n_id"))
       else bruteForceKnn(queries, corpus, k).select(col("q_id"), col("n_id"))
-    val approx = ladder.map { np =>
-      topk(scored.filter(col("cell_rank") <= math.min(np, kCells)))
-        .withColumn("nprobe", lit(np.toLong))
-    }.reduce(_ unionByName _)
+    val rungs = array(ladder.map(np => lit(np.toLong)): _*)
+    val approx = scored
+      .withColumn("nprobe", explode(filter(rungs,
+        np => col("cell_rank") <= least(np, lit(kCells.toLong)))))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("q_id"), col("nprobe")).orderBy(byCos: _*)))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("n_id"), col("nprobe"))
     val nq = exact.agg(countDistinct(col("q_id")).as("__nq"))
     approx.join(exact, Seq("q_id", "n_id"))
       .groupBy(col("nprobe"))
@@ -1424,15 +1430,14 @@ object Similarity {
         expr("""cast((__n * __ssq - cast(__s as decimal(38,0)) * __s)
           | div (cast(__n as decimal(38,0)) * __n) as bigint)"""
           .stripMargin.replace("\n", " ")).as("var_e12"))
-    // |dims| rows; persisted so the total-variance broadcast reads
-    // the cached frame instead of re-scanning the corpus —
-    // bounded-cache persisted (ADVICE r8)
-    val dC = graft.FrameCache.persisted("s25_dims", d)
-    val tot = dC.agg(
+    // |dims| rows; the total-variance broadcast reads the dim
+    // exchange the output computed (a ReusedExchange), so the corpus
+    // is scanned once
+    val tot = d.agg(
       sum(col("var_e12")).as("__tv"),
       expr("cast(round(sqrt(cast(sum(cast(mean_e6 as decimal(38,0)) * mean_e6) as double))) as bigint)")
         .as("centroid_norm_e6"))
-    dC.crossJoin(broadcast(tot))
+    d.crossJoin(broadcast(tot))
       .select(col("dim").cast("long").as("dim"), col("mean_e6"), col("var_e12"),
         expr("cast((cast(var_e12 as decimal(38,0)) * 2000000 + __tv) div (2 * __tv) as bigint)")
           .as("var_share_ppm"),

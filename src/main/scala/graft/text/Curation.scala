@@ -157,8 +157,8 @@ object Curation {
     * hash split leaves open: two near-identical docs hash
     * INDEPENDENTLY, so at 80/10/10 an expected ~2·0.8·0.2+2·0.1·0.9
     * ≈ 34% of cross-dup pairs land in different splits. Cost on top
-    * of x8: the near-dup clustering over the SHARED persisted pair
-    * set (free when any dedup consumer already ran) plus one
+    * of x8: the near-dup clustering over the given labels (the x13
+    * entry computes d6's pair set and components per call) plus one
     * labels⋈docs join on doc_id — the corpus never shuffles for the
     * split itself, which stays a narrow deterministic map of rep_id.
     */
@@ -176,10 +176,10 @@ object Curation {
     * d6's exact-jaccard components as the cluster labels.
     */
   def x13LeakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val pairs = graft.dedup.Dedup.cachedJaccardPairs(spark, dir)
-    val labels = graft.dedup.Clusters.connectedComponents(
-      docs, pairs.select(col("a_id"), col("b_id")))
+    val corpus = Tables.documents(spark, dir)
+    val docs = corpus.select(col("doc_id"))
+    val labels = graft.dedup.Clusters.connectedComponents(docs,
+      graft.dedup.Dedup.exactJaccardPairs(corpus).select(col("a_id"), col("b_id")))
     leakageSafeSplit(docs, labels)
       .select(col("doc_id"), col("rep_id"), col("bucket"), col("split"))
       .orderBy(col("doc_id"))
@@ -936,10 +936,11 @@ object Curation {
   }
 
   /** Verified entry (x23). Sort is oracle-determinism only. */
-  def x23SplitLeakage(spark: SparkSession, dir: String): DataFrame =
-    splitLeakageAudit(Tables.documents(spark, dir),
-      graft.dedup.Dedup.cachedJaccardPairs(spark, dir))
+  def x23SplitLeakage(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    splitLeakageAudit(docs, graft.dedup.Dedup.exactJaccardPairs(docs))
       .orderBy(col("split_lo"), col("split_hi"))
+  }
 
   /** Temperature-scaled mixture plan (x24): the multilingual /
     * DoReMi-style sampling formula — target share of source i at

@@ -153,11 +153,9 @@ class CurationSpec extends GraftSpecBase {
   }
 
   test("over-limit components and un-keyed curateNearDup leave no cache entry behind") {
-    // numCachedEntries is sql-private in Scala, public in bytecode
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    def entries: Int = cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
-    def leftBehind(body: => Unit): Int = { val before = entries; body; entries - before }
+    def leftBehind(body: => Unit): Int = {
+      val before = numCachedEntries; body; numCachedEntries - before
+    }
     val nodes = (1L to 8L).toDF("doc_id")
     val ccLeft = Seq(Seq((1L, 2L)), Seq((1L, 2L), (2L, 3L), (5L, 6L))).map { pairs =>
       pairs -> leftBehind(dedup.Clusters.connectedComponents(nodes, pairs.toDF("a_id", "b_id"),

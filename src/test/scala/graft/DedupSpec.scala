@@ -194,8 +194,8 @@ class DedupSpec extends GraftSpecBase {
     val emb = Tables.embeddings(spark, sf)
     val copies = (1 to 2).map(i => emb.withColumn("vec_id", col("vec_id") + lit(i * 10000000L)))
       .foldLeft(emb)(_ unionByName _)
-    val famBase = dedup.Dedup.vecFamilies("derive_law_base", emb)
-    val famDup = dedup.Dedup.vecFamilies("derive_law_dup", copies)
+    val famBase = dedup.Dedup.vecFamilies(emb)
+    val famDup = dedup.Dedup.vecFamilies(copies)
     assert(dedup.Dedup.derivedNumPlanes(famDup) == dedup.Dedup.derivedNumPlanes(famBase),
       "copy families must not move the derived plane count")
     assert(dedup.Dedup.derivedGridP(famDup) == dedup.Dedup.derivedGridP(famBase),
@@ -432,7 +432,7 @@ class DedupSpec extends GraftSpecBase {
       ("web", "web") -> ((1L, 2L))), s"got $r")
     // real corpus: every pair lands in exactly one matrix cell
     val full = dedup.Dedup.d14(spark, sf).collect()
-    val nPairs = dedup.Dedup.cachedJaccardPairs(spark, sf).count()
+    val nPairs = dedup.Dedup.exactJaccardPairs(Tables.documents(spark, sf)).count()
     assert(full.map(_.getLong(2)).sum == nPairs,
       "matrix must partition the pair set")
   }
@@ -498,7 +498,7 @@ class DedupSpec extends GraftSpecBase {
     assert(full.map(_._2).sum == Tables.documents(spark, sf).count(),
       "histogram must cover every doc")
     assert(full.map { case (d, n) => d * n }.sum ==
-      2 * dedup.Dedup.cachedJaccardPairs(spark, sf).count(),
+      2 * dedup.Dedup.exactJaccardPairs(Tables.documents(spark, sf)).count(),
       "total degree must equal twice the pair count")
   }
 
@@ -728,7 +728,7 @@ class DedupSpec extends GraftSpecBase {
       Seq((50L, Seq(9.0f, 8.0f, 7.0f))))
       .toDF("vec_id", "embedding")
     val ex = intercept[Throwable] {
-      dedup.Dedup.vecFamilies("vec_valve_hot", emb, maxFamily = 4).collect()
+      dedup.Dedup.vecFamilies(emb, maxFamily = 4).collect()
     }
     def chain(t: Throwable): String =
       if (t == null) "" else s"${t.getMessage} | ${chain(t.getCause)}"
@@ -737,7 +737,7 @@ class DedupSpec extends GraftSpecBase {
       s"valve must name itself and the family size: $m")
     // report mode: the family is dropped, the singleton survives,
     // and the report names exactly the dropped family
-    val kept = dedup.Dedup.vecFamilies("vec_valve_hot", emb, maxFamily = 4,
+    val kept = dedup.Dedup.vecFamilies(emb, maxFamily = 4,
       skipOversized = true).collect().map(_.getAs[Long]("rep"))
     assert(kept.toSeq == Seq(50L), s"report mode must keep only the singleton: ${kept.toSeq}")
     val rep = dedup.Dedup.oversizedVecFamilies(emb, maxFamily = 4).collect()
@@ -758,7 +758,7 @@ class DedupSpec extends GraftSpecBase {
       Seq((50L, "a genuinely unique document body unlike any other here")))
       .toDF("doc_id", "text")
     val ex = intercept[Throwable] {
-      dedup.Dedup.textFamilies("text_valve_hot", docs, maxFamily = 4).collect()
+      dedup.Dedup.textFamilies(docs, maxFamily = 4).collect()
     }
     def chain(t: Throwable): String =
       if (t == null) "" else s"${t.getMessage} | ${chain(t.getCause)}"
@@ -768,7 +768,7 @@ class DedupSpec extends GraftSpecBase {
     assert(m.contains("exactDedup"), s"valve must point at the d1 remedy: $m")
     // report mode: the family is dropped, the singleton survives,
     // and the report names exactly the dropped family
-    val kept = dedup.Dedup.textFamilies("text_valve_hot", docs, maxFamily = 4,
+    val kept = dedup.Dedup.textFamilies(docs, maxFamily = 4,
       skipOversized = true).collect().map(_.getAs[Long]("rep"))
     assert(kept.toSeq == Seq(50L),
       s"report mode must keep only the singleton: ${kept.toSeq}")
@@ -826,7 +826,7 @@ class DedupSpec extends GraftSpecBase {
     val sigs = ((1L to 6L).map(i => (i, 7L)) ++ Seq((50L, 99L)))
       .toDF("doc_id", "sim")
     val ex = intercept[Throwable] {
-      dedup.Dedup.simFamilies("sim_valve_hot", sigs, maxFamily = 4).collect()
+      dedup.Dedup.simFamilies(sigs, maxFamily = 4).collect()
     }
     def chain(t: Throwable): String =
       if (t == null) "" else s"${t.getMessage} | ${chain(t.getCause)}"
@@ -834,7 +834,7 @@ class DedupSpec extends GraftSpecBase {
     assert(m.contains("maxFamily=4") && m.contains("6 docs share one simhash signature"),
       s"valve must name itself and the family size: $m")
     assert(m.contains("exactDedup"), s"valve must point at the d1 remedy: $m")
-    val kept = dedup.Dedup.simFamilies("sim_valve_hot", sigs, maxFamily = 4,
+    val kept = dedup.Dedup.simFamilies(sigs, maxFamily = 4,
       skipOversized = true).collect().map(_.getAs[Long]("rep"))
     assert(kept.toSeq == Seq(50L),
       s"report mode must keep only the singleton: ${kept.toSeq}")

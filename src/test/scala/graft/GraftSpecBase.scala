@@ -47,6 +47,16 @@ trait GraftSpecBase extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Entries in the session's `CacheManager`: frames persisted and not
+    * yet unpersisted. `numCachedEntries` is sql-private in Scala and
+    * public in bytecode, hence the reflective call.
+    */
+  def numCachedEntries: Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
 }
 
 object GraftSpecBase {

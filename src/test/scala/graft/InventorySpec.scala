@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level invariants: SURVEY.md §2's coverage table,
   * `SparkEntry.queries` and `SparkEntry.oracleSql` can never drift
-  * apart silently, and every family-builder call site forwards the
-  * strict/report valve. Pure file/registry parsing — no SparkSession.
+  * apart silently, every family-builder call site forwards the
+  * strict/report valve, and library code persists nothing outside the
+  * named exceptions. Pure file/registry parsing — no SparkSession.
   */
 class InventorySpec extends AnyFunSuite {
 
@@ -76,5 +77,46 @@ class InventorySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"family-builder call sites not forwarding the valve choice:\n  " +
         offenders.mkString("\n  "))
+  }
+
+  test("library code persists nothing: no .persist( or .cache() outside the named exceptions") {
+    // A persist inside an operator pins executor storage the caller
+    // cannot see or release; operators share an intermediate through
+    // exchange reuse within the plan they return instead. Exceptions,
+    // by enclosing def:
+    //  - Clusters.connectedComponents (over-limit edge frame) and
+    //    Clusters.propagateMinLabel (loop state): each unpersists
+    //    within the same call;
+    //  - Curation.curateNearDup: the keyed survivor cache, the last
+    //    cross-call cache still open in ROADMAP item 5.
+    val allowed = Set(
+      "dedup/Clusters.scala" -> "connectedComponents",
+      "dedup/Clusters.scala" -> "propagateMinLabel",
+      "text/Curation.scala" -> "curateNearDup")
+    val root = Paths.get("src/main/scala/graft")
+    val Def = """.*\bdef (\w+).*""".r
+    val Persist = """.*(\.persist\(|\.cache\(\)).*""".r
+    def code(line: String): Boolean = {
+      val t = line.trim; !t.startsWith("*") && !t.startsWith("//")
+    }
+    val found = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val lines = Files.readAllLines(f).asScala.toIndexedSeq
+        lines.indices.collect {
+          case i if Persist.matches(lines(i)) && code(lines(i)) =>
+            val enclosing = lines.take(i + 1).reverseIterator
+              .collectFirst { case l @ Def(name) if code(l) => name }.getOrElse("?")
+            (root.relativize(f).toString, enclosing, i + 1)
+        }
+      }
+    val offenders = found.filterNot { case (f, d, _) => allowed((f, d)) }
+    assert(offenders.isEmpty,
+      s"persist/cache in library code (share through exchange reuse instead):\n  " +
+        offenders.map { case (f, d, n) => s"$f:$n in $d" }.mkString("\n  "))
+    // every exception is still live: a stale entry would silently
+    // allow a new persist in a def that no longer needs one
+    assert(allowed.subsetOf(found.map { case (f, d, _) => (f, d) }.toSet),
+      s"stale exception: ${allowed -- found.map { case (f, d, _) => (f, d) }}")
   }
 }

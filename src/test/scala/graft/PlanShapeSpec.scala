@@ -21,6 +21,18 @@ class PlanShapeSpec extends GraftSpecBase {
     }
   }
 
+  /** (computed, reused) exchanges whose plan line matches `key`. A
+    * ReusedExchange line echoes the exchange it references, so lines
+    * are counted, not occurrences.
+    */
+  private def exchangeCounts(plan: String, key: String): (Int, Int) = {
+    val lines = plan.linesIterator.filter(key.r.findFirstIn(_).isDefined).toSeq
+    (lines.count(l => l.contains("Exchange") && !l.contains("ReusedExchange")),
+      lines.count(_.contains("ReusedExchange")))
+  }
+
+  private def fileScans(plan: String): Int = "FileScan parquet".r.findAllIn(plan).length
+
   test("a1: filter and projection reach the parquet scan") {
     val plan = finalPlan(analytics.Queries.pricingSummary(spark, sf))
     assert(plan.contains("PushedFilters: [LessThanOrEqual(l_shipdate"),
@@ -111,32 +123,18 @@ class PlanShapeSpec extends GraftSpecBase {
   }
 
   test("d4: single shingle pass — the posting frame is persisted, join sides add no exchange") {
-    // r9 collapse-first contract: the df-capped rep-posting frame is
-    // FrameCache-persisted (AQE does not reuse an exchange whose
-    // input is a cache stage, so the un-persisted spelling ran the
-    // shingle + window pass once per join side), and the cached
-    // build's hashpartitioning(s) satisfies the self-join's
-    // distribution on BOTH sides — the top-level join region must
-    // plan zero hash exchanges of its own. The cached builds' plans
-    // are reprinted per read, so exchanges/scans are counted outside
-    // InMemoryRelation reprints (first occurrence cut).
-    val df = dedup.Dedup.exactJaccardPairs(Tables.documents(spark, sf), threshold = 0.6)
-    df.collect()
-    val exec = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    // cached builds are leaves of the executed tree, so any
-    // ShingleHashes visible in this walk is a LIVE per-side recompute
-    val liveShingles = exec.collect {
-      case p if p.expressions.exists(
-        _.exists(_.isInstanceOf[functions.ShingleHashes])) => p.nodeName
-    }
-    assert(liveShingles.isEmpty,
-      s"the shingle pass must be cache-fed, found live in: $liveShingles")
-    val plan = exec.toString
-    assert(plan.contains("InMemoryTableScan"),
-      s"join sides must read the cached posting frame:\n$plan")
+    // r9 collapse-first contract, without a persist: both self-join
+    // sides read the df-capped rep-posting frame, whose df window
+    // plans ONE hashpartitioning(s) exchange — computed once, the other
+    // side a ReusedExchange — so the shingle + window pass runs once.
+    // That partitioning satisfies the self-join's distribution on both
+    // sides, so the join plans no s-keyed exchange of its own.
+    val plan = finalPlan(
+      dedup.Dedup.exactJaccardPairs(Tables.documents(spark, sf), threshold = 0.6))
+    val (computed, reused) = exchangeCounts(plan, "hashpartitioning\\(s#")
+    assert(computed == 1, s"the posting exchange must be computed once, got $computed:\n$plan")
+    assert(reused >= 1, s"the other join side must reuse the posting exchange:\n$plan")
+    assert(fileScans(plan) == 1, s"the corpus must be scanned once:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"the pair join must stay an equi-join:\n$plan")
   }
@@ -573,7 +571,7 @@ class PlanShapeSpec extends GraftSpecBase {
   }
 
   test("d14: source decoration streams the corpus — pair side broadcasts, no corpus shuffle for the joins") {
-    val pairs = dedup.Dedup.cachedJaccardPairs(spark, sf)
+    val pairs = dedup.Dedup.exactJaccardPairs(Tables.documents(spark, sf))
       .select("a_id", "b_id").localCheckpoint()
     val plan = finalPlan(dedup.Dedup.crossSourceDupes(
       pairs, Tables.documents(spark, sf)))
@@ -774,14 +772,10 @@ class PlanShapeSpec extends GraftSpecBase {
     // computed sig exchange, every other use a ReusedExchange (whose
     // plan line echoes the referenced exchange — count lines).
     // Without the reuse the signature pass would run once per consumer.
-    val lines = plan.linesIterator.toSeq
-    val sigComputed = lines.count(l =>
-      l.contains("Exchange hashpartitioning(sig") && !l.contains("ReusedExchange"))
-    val sigReused = lines.count(l =>
-      l.contains("ReusedExchange") && l.contains("hashpartitioning(sig"))
+    val (sigComputed, sigReused) = exchangeCounts(plan, "hashpartitioning\\(sig")
     assert(sigComputed == 1, s"the sig exchange must be computed once, got $sigComputed:\n$plan")
     assert(sigReused >= 1, s"the other family consumers must reuse the sig exchange:\n$plan")
-    val sigPasses = lines.count(_.contains("minhash_signature("))
+    val sigPasses = plan.linesIterator.count(_.contains("minhash_signature("))
     assert(sigPasses == 1, s"the signature pass must run once, got $sigPasses:\n$plan")
     assert(!plan.contains("hashpartitioning(band_sig"),
       s"band shuffle must be signature-free:\n$plan")
@@ -848,19 +842,14 @@ class PlanShapeSpec extends GraftSpecBase {
   }
 
   test("d11: containment join is cache-fed like d4 (single shingle pass, no live recompute)") {
-    val df = dedup.Dedup.containmentPairs(Tables.documents(spark, sf), threshold = 0.9)
-    df.collect()
-    val exec = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val liveShingles = exec.collect {
-      case p if p.expressions.exists(
-        _.exists(_.isInstanceOf[functions.ShingleHashes])) => p.nodeName
-    }
-    assert(liveShingles.isEmpty,
-      s"the shingle pass must be cache-fed, found live in: $liveShingles")
-    val plan = exec.toString
+    // same posting frame as d4: one computed hashpartitioning(s)
+    // exchange, the other join side a ReusedExchange, one corpus scan
+    val plan = finalPlan(
+      dedup.Dedup.containmentPairs(Tables.documents(spark, sf), threshold = 0.9))
+    val (computed, reused) = exchangeCounts(plan, "hashpartitioning\\(s#")
+    assert(computed == 1 && reused >= 1,
+      s"the posting exchange must be computed once and reused, got $computed computed, $reused reused:\n$plan")
+    assert(fileScans(plan) == 1, s"the corpus must be scanned once:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"containment must stay an equi-join:\n$plan")
   }
@@ -1323,13 +1312,14 @@ class PlanShapeSpec extends GraftSpecBase {
 
   test("s25: one corpus pass — the total-variance broadcast reads the cached dim frame") {
     val plan = finalPlan(similarity.Similarity.s25(spark, sf))
-    // both consumers (the per-dim output and the 1-row total) must
-    // read the persisted frame; the parquet scans remaining in the
-    // plan string sit INSIDE the printed InMemoryRelation subtree,
-    // so the cache count is the runtime single-pass evidence
-    val cached = "InMemoryTableScan".r.findAllIn(plan).length
-    assert(cached >= 2,
-      s"both the output and the total must read the persisted dim frame:\n$plan")
+    // both consumers (the per-dim output and the 1-row total) read the
+    // dim frame, which is not persisted: its dim exchange is computed
+    // once and the total's read is a ReusedExchange, so the corpus is
+    // scanned once
+    val (computed, reused) = exchangeCounts(plan, "hashpartitioning\\(dim#")
+    assert(computed == 1 && reused >= 1,
+      s"the dim exchange must be computed once and reused, got $computed computed, $reused reused:\n$plan")
+    assert(fileScans(plan) == 1, s"the embeddings must be scanned once:\n$plan")
     // partial aggregation must collapse the posexplode fan-out before
     // the exchange: the dim shuffle carries dims x partitions rows
     assert(plan.contains("partial_sum"),
@@ -1340,9 +1330,13 @@ class PlanShapeSpec extends GraftSpecBase {
 
   test("a47: power rounds reuse the persisted edge frame; no cross joins anywhere") {
     val plan = finalPlan(analytics.Queries.pageRank(Tables.events(spark, sf)))
-    val cached = "InMemoryTableScan".r.findAllIn(plan).length
-    assert(cached >= 6,
-      s"3 rounds x (edges + nodes) must read the cache, got $cached:\n$plan")
+    // the edge frame is not persisted: its (src, dst) exchange is
+    // computed once and every round reads it as a ReusedExchange, so
+    // the events are scanned once for all 3 rounds
+    val (computed, reused) = exchangeCounts(plan, "hashpartitioning\\(src#\\d+, dst#")
+    assert(computed == 1 && reused >= 3,
+      s"the edge exchange must be computed once and reused by all 3 rounds, got $computed computed, $reused reused:\n$plan")
+    assert(fileScans(plan) == 1, s"the events must be scanned once:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"every round is a keyed equi-join:\n$plan")
     assert(!plan.contains("Exchange rangepartitioning"),
