@@ -861,7 +861,9 @@ object Queries {
     * prune `df` to that band's columns and re-derive it). Each cut
     * costs one bounded offsets branch plus one band-partitioned window
     * on the main chain. Nothing is persisted, so a second call
-    * recomputes.
+    * recomputes. Every row also carries `__rows`, `df`'s row count
+    * summed from cut 0's per-band counts, so an ntile cut reads n off
+    * the same branch instead of aggregating `df` once more.
     */
   private[graft] def bandedRowNumbers(df: DataFrame,
       cuts: Seq[(Column, Seq[Column], String)],
@@ -871,18 +873,18 @@ object Queries {
         struct(lit(i).as("cut"), band.as("band")) }: _*)).as("__cb"))
       .groupBy(col("__cb.cut").as("__cut"), col("__cb.band").as("__band"))
       .agg(count(lit(1)).as("__bval"))
+    def cutCounts(i: Int): DataFrame = perBand.filter(col("__cut") === i).drop("__cut")
     cuts.zipWithIndex.foldLeft(df) {
       case (acc, ((band, order, out), i)) =>
         val bc = s"__band$i"
-        val offsets = prefixOffsets(
-          perBand.filter(col("__cut") === i).drop("__cut"), sbandWidth)
+        val offsets = prefixOffsets(cutCounts(i), sbandWidth)
           .withColumnRenamed("__band", bc)
         acc.withColumn(bc, band)
           .join(broadcast(offsets), Seq(bc))
           .withColumn(out, col("__offset") +
             row_number().over(Window.partitionBy(col(bc)).orderBy(order: _*)))
           .drop(bc, "__offset")
-    }
+    }.crossJoin(broadcast(cutCounts(0).agg(sum(col("__bval")).as("__rows"))))
   }
 
   private[graft] def bandedRowNumber(df: DataFrame, band: Column,
@@ -973,14 +975,11 @@ object Queries {
         // band = $1024-wide spend bucket, negated so ascending bands
         // walk spend DESC; the offsets branch and the main chain read
         // the per-customer aggregate's one exchange (reused within the
-        // plan); the n scalar prunes that aggregate to its key, so it
-        // is one more narrow count over the fact
-        val n = spend.agg(count(lit(1)).as("__n"))
+        // plan), and n sums the offsets branch's per-band counts
         bandedRowNumber(spend, expr("-floor(spend / 1024.0)"),
           Seq(col("spend").desc, col("o_custkey")), "__rk")
-          .crossJoin(broadcast(n))
-          .withColumn("decile", ntileFromRank("__rk", "__n", 10).cast("long"))
-          .drop("__rk", "__n")
+          .withColumn("decile", ntileFromRank("__rk", "__rows", 10).cast("long"))
+          .drop("__rk", "__rows")
       }
     cut
       .groupBy(col("decile"))
@@ -1232,8 +1231,9 @@ object Queries {
     // bandedRowNumber instead of single-partition ntile sorts —
     // recency/freq band on their own bounded-cardinality values,
     // monetary on a 65536-cent-wide bucket; buckets come from
-    // ntileFromRank's closed form over one broadcast n scalar.
-    // Bit-identical to the ntile spelling (spec-pinned both ways).
+    // ntileFromRank's closed form over n, which bandedRowNumbers sums
+    // from its own per-band counts. Bit-identical to the ntile
+    // spelling (spec-pinned both ways).
     val quintiled =
       if (!useBandedWindows(orders, bandedMinBytes))
         cust
@@ -1244,7 +1244,6 @@ object Queries {
           .withColumn("m_q", ntile(5).over(
             Window.orderBy(col("__cents").desc, col("o_custkey"))).cast("long"))
       else {
-        val nCust = cust.agg(count(lit(1)).as("__n"))
         bandedRowNumbers(cust, Seq(
           (col("recency_days"),
             Seq(col("recency_days"), col("o_custkey")), "__rk_r"),
@@ -1252,10 +1251,9 @@ object Queries {
             Seq(col("freq").desc, col("o_custkey")), "__rk_f"),
           (expr("-(__cents div 65536)"),
             Seq(col("__cents").desc, col("o_custkey")), "__rk_m")))
-          .crossJoin(broadcast(nCust))
-          .withColumn("r_q", ntileFromRank("__rk_r", "__n", 5).cast("long"))
-          .withColumn("f_q", ntileFromRank("__rk_f", "__n", 5).cast("long"))
-          .withColumn("m_q", ntileFromRank("__rk_m", "__n", 5).cast("long"))
+          .withColumn("r_q", ntileFromRank("__rk_r", "__rows", 5).cast("long"))
+          .withColumn("f_q", ntileFromRank("__rk_f", "__rows", 5).cast("long"))
+          .withColumn("m_q", ntileFromRank("__rk_m", "__rows", 5).cast("long"))
       }
     quintiled
       .groupBy(col("r_q"), col("f_q"), col("m_q"))

@@ -17,7 +17,7 @@ import graft.similarity.Similarity
   * but with semantically meaningful cells.
   *
   * Scale shape: the quantizer is k×dim floats trained on a bounded
-  * deterministic sample (s3's trainer, shared cache); assignment is
+  * deterministic sample (s3's trainer, run once per call); assignment is
   * a pure narrow literal-centroid map, so the corpus never shuffles
   * for training. The within-cell self-join shuffles both sides on
   * cell — the two sides build identical exchanges, so Catalyst
@@ -45,22 +45,22 @@ object SemDedup {
     * per-cell work is a constant (targetCellSize²/2 cosines) and
     * total work is linear in n. The count is a single metadata-cheap
     * aggregate over the id column; callers that already know n (or
-    * must replay a fixed quantizer, like the verified entry) pass
-    * numCells explicitly. Result is UNORDERED — oracle-determinism
+    * must replay a fixed quantizer) pass numCells explicitly. Count
+    * and quantizer derive from `emb` within the call, so a call over
+    * a subset trains on that subset. Result is UNORDERED — oracle-determinism
     * sorting lives in the SparkEntry lambda (same contract as Dedup).
     */
   def semanticDedup(emb: DataFrame, numCells: Int = 0,
                     threshold: Double = 0.4,
-                    targetCellSize: Int = 4096,
-                    cacheKey: Option[String] = None): DataFrame = {
+                    targetCellSize: Int = 4096): DataFrame = {
     // the shared family derivation (Similarity.derivedNumCells):
     // counts NON-NULL embeddings — the population the trainer ingests
     // and the oracle's `e` CTE counts, so a SQL replay derives the
-    // identical k — and shares the per-corpus count cache
+    // identical k
     val k =
       if (numCells > 0) numCells
-      else Similarity.derivedNumCells(emb, targetCellSize, cacheKey)
-    val cents = Similarity.cachedCentroids(emb, k, iters = 3, cacheKey)
+      else Similarity.derivedNumCells(emb, targetCellSize)
+    val cents = Similarity.centroidMatrix(emb, k, iters = 3)
     val assigned = emb.select(col("vec_id"), col("embedding"))
       .filter(col("embedding").isNotNull)
       .withColumn("cell", Similarity.assignBest(col("embedding"), cents))
@@ -84,10 +84,10 @@ object SemDedup {
     * (128 — VERDICT r12 item 1), which the DuckDB oracle replays with
     * the same ceil(n/128) clamp-16 formula in its cents0 LIMIT, so
     * quantizer and replay agree at ANY corpus size (at the verified
-    * scales both derive the floor 16, keeping the cache shared with
-    * s3's model); the determinism sort is entry-only.
+    * scales both derive the floor 16, so d9 trains the same model as
+    * s3 from the same sample); the determinism sort is entry-only.
     */
   def d9(spark: SparkSession, dir: String): DataFrame =
-    semanticDedup(Tables.embeddings(spark, dir), targetCellSize = 128,
-      cacheKey = Some(dir)).orderBy(col("vec_id"))
+    semanticDedup(Tables.embeddings(spark, dir), targetCellSize = 128)
+      .orderBy(col("vec_id"))
 }

@@ -144,29 +144,26 @@ object Similarity {
       .select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
   }
 
-  private[similarity] def centroidMatrix(corpus: DataFrame, k: Int, iters: Int,
-                                         sampleMod: Int = 4,
-                                         sampleCap: Int = 20000,
-                                         samplePredicate: Option[Column] = None): Array[(Int, Array[Float])] = {
-    // An EMPTY corpus trains k placeholder centroids that no row will
-    // ever be assigned against (assignment maps over zero rows), so
-    // every downstream frame is correctly empty with its contract
-    // schema. A sample smaller than k clamps k — Lloyd with k > n has
-    // no meaningful extra cells anyway.
-    val sample = trainerSample(corpus, sampleMod, sampleCap, samplePredicate)
-    if (sample.isEmpty)
-      return Array.tabulate(k)(i => (i, Array(1f)))
-    centroidsFromSample(sample, k, iters)
-  }
+  private[graft] def centroidMatrix(corpus: DataFrame, k: Int, iters: Int,
+                                     sampleMod: Int = 4,
+                                     sampleCap: Int = 20000,
+                                     samplePredicate: Option[Column] = None): Array[(Int, Array[Float])] =
+    centroidsFromSample(trainerSample(corpus, sampleMod, sampleCap, samplePredicate), k, iters)
 
-  /** The Lloyd loop over an ALREADY-COLLECTED non-empty sample —
-    * split out so cell-anchored reports (s26) can take the sample
-    * once, decide the empty-corpus contract themselves (empty frame,
-    * not placeholder cells), and train without a second corpus scan.
+  /** The Lloyd loop over an ALREADY-COLLECTED sample — split out so
+    * reports that measure the sample itself (s24) or anchor on cells
+    * (s26) collect it once and train without a second corpus scan.
+    * An EMPTY sample trains k placeholder centroids that no row will
+    * ever be assigned against (assignment maps over zero rows), so
+    * every downstream frame is correctly empty with its contract
+    * schema; s26 checks for the empty sample first, since its output
+    * is anchored on the cells. A sample smaller than k clamps k —
+    * Lloyd with k > n has no meaningful extra cells anyway.
     */
   private[similarity] def centroidsFromSample(sample: Array[Array[Float]],
                                               k: Int, iters: Int): Array[(Int, Array[Float])] = {
-    require(sample.nonEmpty, "centroidsFromSample requires a non-empty sample")
+    if (sample.isEmpty)
+      return Array.tabulate(k)(i => (i, Array(1f)))
     val kEff = math.min(k, sample.length)
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -267,18 +264,6 @@ object Similarity {
     }
   }
 
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), Array[Array[Array[Float]]]]()
-
-  private[similarity] def cachedPqCodebooks(corpus: DataFrame, m: Int, ksub: Int,
-                                            iters: Int, cacheKey: Option[String]): Array[Array[Array[Float]]] =
-    cacheKey match {
-      case Some(key) =>
-        pqCache.computeIfAbsent((key, m, ksub, iters),
-          _ => pqCodebooks(corpus, m, ksub, iters))
-      case None => pqCodebooks(corpus, m, ksub, iters)
-    }
-
   /** PQ KNN with asymmetric distance (ADC): the corpus is stored as
     * m small codes per vector — at m=8, a 256-byte float32 embedding
     * becomes 8 bytes, a 32× scan compression (vs s4's 4×) — and each
@@ -292,9 +277,8 @@ object Similarity {
     * L2 order is cosine order, so ranks compare directly to s1/s4.
     */
   def pqKnn(queries: DataFrame, corpus: DataFrame, k: Int = 10,
-            m: Int = 8, ksub: Int = 16, iters: Int = 2,
-            cacheKey: Option[String] = None): DataFrame = {
-    val books = cachedPqCodebooks(corpus, m, ksub, iters, cacheKey)
+            m: Int = 8, ksub: Int = 16, iters: Int = 2): DataFrame = {
+    val books = pqCodebooks(corpus, m, ksub, iters)
     val lit3: Seq[Seq[Seq[Float]]] = books.map(_.map(_.toSeq).toSeq).toSeq
     // LUT stride = the codebook's ACTUAL width (the trainer clamps
     // ksub on degenerate corpora smaller than ksub rows)
@@ -317,14 +301,6 @@ object Similarity {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** Cross-call quantizer cache: training is deterministic in
-    * (corpus key, k, iters), so repeated queries against the same
-    * corpus reuse the centroid matrix instead of re-reading the
-    * sample.
-    */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), Array[(Int, Array[Float])]]()
-
   /** Corpus-derived cell count — d9's n/targetCellSize sizing ported
     * to the whole IVF family (VERDICT r12 item 1): k =
     * clamp(ceil(n / targetCellSize), 16, 1 << 20), n = NON-NULL
@@ -340,43 +316,17 @@ object Similarity {
     * (every test corpus derives the old default, so results are
     * bit-identical there), and the cap bounds the driver-side Lloyd
     * model (kEff additionally clamps to the 20k trainer sample).
-    * The count is one metadata-cheap aggregate, cached per
-    * (cacheKey, targetCellSize) alongside the centroid cache so a
-    * corpus pays it once across the family.
+    * The count is one metadata-cheap aggregate over the frame the
+    * caller passes, run once per call: every family operator takes
+    * `numCells <= 0` to mean "derive", and an explicit positive value
+    * pins the quantizer (fixed-model reports s24/s26, specs, replays
+    * of a stored assignment) and skips the count.
     */
-  private val cellCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Integer]()
-
   private[graft] def derivedNumCells(corpus: DataFrame,
-                                     targetCellSize: Int = 128,
-                                     cacheKey: Option[String] = None): Int = {
-    def compute: Int = {
-      val n = corpus.filter(col("embedding").isNotNull).count()
-      math.min(1L << 20, math.max(16L, (n + targetCellSize - 1) / targetCellSize)).toInt
-    }
-    cacheKey match {
-      case Some(key) =>
-        cellCountCache.computeIfAbsent((key, targetCellSize), _ => compute).intValue()
-      case None => compute
-    }
+                                     targetCellSize: Int = 128): Int = {
+    val n = corpus.filter(col("embedding").isNotNull).count()
+    math.min(1L << 20, math.max(16L, (n + targetCellSize - 1) / targetCellSize)).toInt
   }
-
-  /** `numCells <= 0` (the family default) derives from the corpus;
-    * an explicit positive value pins the quantizer (fixed-model
-    * reports s24/s26, specs, replays of a stored assignment).
-    */
-  private[graft] def resolveCells(corpus: DataFrame, numCells: Int,
-                                  cacheKey: Option[String]): Int =
-    if (numCells > 0) numCells
-    else derivedNumCells(corpus, cacheKey = cacheKey)
-
-  private[graft] def cachedCentroids(corpus: DataFrame, k: Int, iters: Int,
-                                          cacheKey: Option[String]): Array[(Int, Array[Float])] =
-    cacheKey match {
-      case Some(key) =>
-        centroidCache.computeIfAbsent((key, k, iters), _ => centroidMatrix(corpus, k, iters))
-      case None => centroidMatrix(corpus, k, iters)
-    }
 
   def kmeansCentroids(corpus: DataFrame, k: Int = 16, iters: Int = 3): DataFrame = {
     val spark = corpus.sparkSession
@@ -405,10 +355,9 @@ object Similarity {
     */
   def ivfKnn(queries: DataFrame, corpus: DataFrame, k: Int = 10,
              numCells: Int = 0, nprobe: Int = 4,
-             cacheKey: Option[String] = None,
              corpusPredicate: Option[Column] = None): DataFrame = {
-    val kCells = resolveCells(corpus, numCells, cacheKey)
-    val cents = cachedCentroids(corpus, kCells, iters = 3, cacheKey)
+    val kCells = if (numCells > 0) numCells else derivedNumCells(corpus)
+    val cents = centroidMatrix(corpus, kCells, iters = 3)
     val c = corpusPredicate.fold(corpus)(corpus.filter)
       .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
       .withColumn("cell_id", assignBest(col("n_emb"), cents))
@@ -457,10 +406,9 @@ object Similarity {
     * vs the exact path is measured in SimilaritySpec.
     */
   def ivfRangeSearch(queries: DataFrame, corpus: DataFrame, tau: Double,
-                     numCells: Int = 0, nprobe: Int = 4,
-                     cacheKey: Option[String] = None): DataFrame = {
-    val kCells = resolveCells(corpus, numCells, cacheKey)
-    val cents = cachedCentroids(corpus, kCells, iters = 3, cacheKey)
+                     numCells: Int = 0, nprobe: Int = 4): DataFrame = {
+    val kCells = if (numCells > 0) numCells else derivedNumCells(corpus)
+    val cents = centroidMatrix(corpus, kCells, iters = 3)
     val c = corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
       .withColumn("cell_id", assignBest(col("n_emb"), cents))
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -521,7 +469,7 @@ object Similarity {
     */
   def s3(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.vectors(spark, dir)
-    ivfKnn(querySet(emb), emb, nprobe = 12, cacheKey = Some(dir))
+    ivfKnn(querySet(emb), emb, nprobe = 12)
   }
 
   /** Scalar-quantized (int8) KNN: per-vector symmetric quantization
@@ -591,7 +539,7 @@ object Similarity {
     */
   def s9(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.vectors(spark, dir)
-    pqKnn(querySet(emb), emb, m = 16, ksub = 32, cacheKey = Some(dir))
+    pqKnn(querySet(emb), emb, m = 16, ksub = 32)
   }
 
   /** PQ candidate generation + exact re-rank — the production
@@ -606,9 +554,9 @@ object Similarity {
     */
   def pqRerankKnn(queries: DataFrame, corpus: DataFrame, k: Int = 10,
                   nCand: Int = 100, m: Int = 8, ksub: Int = 16,
-                  iters: Int = 2, cacheKey: Option[String] = None): DataFrame = {
+                  iters: Int = 2): DataFrame = {
     val cand = pqKnn(queries, corpus, k = nCand, m = m, ksub = ksub,
-      iters = iters, cacheKey = cacheKey).select(col("q_id"), col("n_id"))
+      iters = iters).select(col("q_id"), col("n_id"))
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
@@ -623,23 +571,22 @@ object Similarity {
   }
 
   /** s10: filtered (metadata-gated) IVF search — neighbors restricted
-    * to even-label corpus vectors; same quantizer/cache/probe
+    * to even-label corpus vectors; same quantizer/probe
     * parameterization as s3, so the two entries differ ONLY by the
     * pushed-down corpus predicate.
     */
   def s10(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.vectors(spark, dir)
-    ivfKnn(querySet(emb), emb, nprobe = 12, cacheKey = Some(dir),
+    ivfKnn(querySet(emb), emb, nprobe = 12,
       corpusPredicate = Some(col("label") % 2 === 0))
   }
 
   /** s11: s9's PQ short list (100 candidates at m=16 × ksub=32,
-    * shared codebook cache) re-ranked by exact cosine.
+    * the same codebooks) re-ranked by exact cosine.
     */
   def s11(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.vectors(spark, dir)
-    pqRerankKnn(querySet(emb), emb, nCand = 100, m = 16, ksub = 32,
-      cacheKey = Some(dir))
+    pqRerankKnn(querySet(emb), emb, nCand = 100, m = 16, ksub = 32)
   }
 
   /** Verified entry (s12): exact radius search at tau = 0.35 — the
@@ -903,10 +850,9 @@ object Similarity {
     * n_id (deterministic both engines); cosine rounded only for
     * output.
     */
-  def knnGraph(corpus: DataFrame, k: Int = 5, numCells: Int = 0,
-               cacheKey: Option[String] = None): DataFrame = {
-    val kCells = resolveCells(corpus, numCells, cacheKey)
-    val cents = cachedCentroids(corpus, kCells, iters = 3, cacheKey)
+  def knnGraph(corpus: DataFrame, k: Int = 5, numCells: Int = 0): DataFrame = {
+    val kCells = if (numCells > 0) numCells else derivedNumCells(corpus)
+    val cents = centroidMatrix(corpus, kCells, iters = 3)
     // the graph is over the VECTOR corpus (Tables.vectors' contract);
     // filtering here (where the array is read anyway) lets callers
     // pass the raw table and keep their label-only scans pruned
@@ -927,7 +873,7 @@ object Similarity {
 
   /** Verified entry (s15). Sort is oracle-determinism only. */
   def s15(spark: SparkSession, dir: String): DataFrame =
-    knnGraph(Tables.embeddings(spark, dir), cacheKey = Some(dir))
+    knnGraph(Tables.embeddings(spark, dir))
       .orderBy(col("vec_id"), col("rank"))
 
   /** kNN label classification report (s18): every vector's label
@@ -942,7 +888,7 @@ object Similarity {
     * scoring them as wrong would fake noise.
     *
     * Scale shape: rides s15's kNN graph (within-cell equi-join via
-    * the SHARED cached quantizer — never corpus² pairs); the k·n
+    * the same quantizer — never corpus² pairs); the k·n
     * edge frame joins the (id, label) projection on the neighbor id
     * (two id-keyed exchanges of bounded rows), votes aggregate on
     * (vec, label), the argmax is a window over the per-vector vote
@@ -951,9 +897,8 @@ object Similarity {
     * key. The corpus itself is touched exactly as often as s15
     * touches it.
     */
-  def knnClassify(corpus: DataFrame, k: Int = 5, numCells: Int = 0,
-                  cacheKey: Option[String] = None): DataFrame = {
-    val g = knnGraph(corpus, k, numCells, cacheKey)
+  def knnClassify(corpus: DataFrame, k: Int = 5, numCells: Int = 0): DataFrame = {
+    val g = knnGraph(corpus, k, numCells)
     // Unlabeled neighbors cannot vote: a NULL label is not a class,
     // and letting it win ties is also engine-dependent (Spark windows
     // order nulls first, SQL engines last — the dirty-corpus gate
@@ -982,7 +927,7 @@ object Similarity {
 
   /** Verified entry (s18). Sort is oracle-determinism only. */
   def s18(spark: SparkSession, dir: String): DataFrame =
-    knnClassify(Tables.embeddings(spark, dir), cacheKey = Some(dir))
+    knnClassify(Tables.embeddings(spark, dir))
       .orderBy(col("label"))
 
   /** kNN-distance outlier report (s19): each vector's similarity to
@@ -1002,8 +947,8 @@ object Similarity {
     * absent — they are cell-size artifacts, not outliers.
     */
   def knnOutliers(corpus: DataFrame, k: Int = 5, numCells: Int = 0,
-                  topN: Int = 25, cacheKey: Option[String] = None): DataFrame = {
-    val kth = knnGraph(corpus, k, numCells, cacheKey)
+                  topN: Int = 25): DataFrame = {
+    val kth = knnGraph(corpus, k, numCells)
       .filter(col("rank") === k)
       .select(col("vec_id"), col("cosine").as("kth_cosine"))
     val top = kth.orderBy(col("kth_cosine"), col("vec_id")).limit(topN)
@@ -1017,7 +962,7 @@ object Similarity {
 
   /** Verified entry (s19). Sort is oracle-determinism only. */
   def s19(spark: SparkSession, dir: String): DataFrame =
-    knnOutliers(Tables.embeddings(spark, dir), cacheKey = Some(dir))
+    knnOutliers(Tables.embeddings(spark, dir))
       .orderBy(col("isolation_rank"))
 
   /** IVF nprobe/recall curve (s20): mean recall@k of the IVF index
@@ -1049,11 +994,10 @@ object Similarity {
     * exact-integer division.
     */
   def nprobeCurve(queries: DataFrame, corpus: DataFrame, k: Int = 10,
-                  ladder: Seq[Int] = Seq(1, 2, 4, 8, 16), numCells: Int = 0,
-                  cacheKey: Option[String] = None): DataFrame = {
-    val kCells = resolveCells(corpus, numCells, cacheKey)
+                  ladder: Seq[Int] = Seq(1, 2, 4, 8, 16), numCells: Int = 0): DataFrame = {
+    val kCells = if (numCells > 0) numCells else derivedNumCells(corpus)
     val maxNp = math.min(ladder.max, kCells)
-    val cents = cachedCentroids(corpus, kCells, iters = 3, cacheKey)
+    val cents = centroidMatrix(corpus, kCells, iters = 3)
     val c = corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
       .withColumn("cell_id", assignBest(col("n_emb"), cents))
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1096,7 +1040,7 @@ object Similarity {
   /** Verified entry (s20). Sort is oracle-determinism only. */
   def s20(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.vectors(spark, dir)
-    nprobeCurve(querySet(emb), emb, cacheKey = Some(dir))
+    nprobeCurve(querySet(emb), emb)
       .orderBy(col("nprobe"))
   }
 
@@ -1159,10 +1103,9 @@ object Similarity {
     * count, one division.
     */
   def scanCostCurve(queries: DataFrame, corpus: DataFrame,
-                    ladder: Seq[Int] = Seq(1, 2, 4, 8, 16), numCells: Int = 0,
-                    cacheKey: Option[String] = None): DataFrame = {
-    val kCells = resolveCells(corpus, numCells, cacheKey)
-    val cents = cachedCentroids(corpus, kCells, iters = 3, cacheKey)
+                    ladder: Seq[Int] = Seq(1, 2, 4, 8, 16), numCells: Int = 0): DataFrame = {
+    val kCells = if (numCells > 0) numCells else derivedNumCells(corpus)
+    val cents = centroidMatrix(corpus, kCells, iters = 3)
     val sizes = corpus.select(col("vec_id"), col("embedding"))
       .withColumn("cell_id", assignBest(col("embedding"), cents))
       .groupBy(col("cell_id")).agg(count(lit(1)).as("__cell_n"))
@@ -1192,7 +1135,7 @@ object Similarity {
   /** Verified entry (s22). Sort is oracle-determinism only. */
   def s22(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.vectors(spark, dir)
-    scanCostCurve(querySet(emb), emb, cacheKey = Some(dir))
+    scanCostCurve(querySet(emb), emb)
       .orderBy(col("nprobe"))
   }
 
@@ -1258,7 +1201,7 @@ object Similarity {
     val emb = Tables.vectors(spark, dir)
     val exact = bruteForceKnn(querySet(emb), emb, k)
       .select(col("q_id"), col("n_id"))
-    val approx = ivfKnn(querySet(emb), emb, k, nprobe = 12, cacheKey = Some(dir))
+    val approx = ivfKnn(querySet(emb), emb, k, nprobe = 12)
       .select(col("q_id"), col("n_id"))
     approx.join(exact, Seq("q_id", "n_id"), "left_semi")
       .groupBy(col("q_id"))
@@ -1343,21 +1286,17 @@ object Similarity {
     * grid, the final single division of two exact longs is one IEEE
     * op — no summation-order drift can flip a rounding boundary).
     */
-  def ivfConvergence(corpus: DataFrame, k: Int = 16, iters: Int = 3,
-                     cacheKey: Option[String] = None): DataFrame = {
-    // The report measures the TRAINER's sample, so it reuses the
-    // trainer's own bounded collect ([[trainerSample]] — fallback
-    // included) as a LOCAL frame: the per-rung assignment/cosine
-    // passes below then cost zero corpus scans (each rung previously
-    // re-scanned the corpus just to re-derive the sample).
-    val spark0 = corpus.sparkSession
-    import spark0.implicits._
-    val sample = trainerSample(corpus)
-      .toSeq.map(v => Tuple1(v.toSeq)).toDF("embedding")
+  def ivfConvergence(corpus: DataFrame, k: Int = 16, iters: Int = 3): DataFrame = {
+    // The report measures the TRAINER's sample, so it collects the
+    // trainer's own bounded sample once ([[trainerSample]] — fallback
+    // included), trains every rung from it, and scores it as a LOCAL
+    // frame: no rung scans the corpus again.
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val collected = trainerSample(corpus)
+    val sample = collected.toSeq.map(v => Tuple1(v.toSeq)).toDF("embedding")
     (0 to iters).map { r =>
-      val cents = cachedCentroids(corpus, k, r, cacheKey)
-      val spark = corpus.sparkSession
-      import spark.implicits._
+      val cents = centroidsFromSample(collected, k, r)
       val cdf = cents.toSeq.map { case (cid, e) => (cid, e.toSeq) }
         .toDF("cell", "cell_emb")
       sample
@@ -1380,7 +1319,7 @@ object Similarity {
 
   /** Verified entry (s24). Sort is oracle-determinism only. */
   def s24(spark: SparkSession, dir: String): DataFrame =
-    ivfConvergence(Tables.vectors(spark, dir), cacheKey = Some(dir))
+    ivfConvergence(Tables.vectors(spark, dir))
       .orderBy(col("iter"))
 
   /** Embedding-space anisotropy profile (s25) — the health check run
@@ -1547,10 +1486,9 @@ object Similarity {
     * prices (s17/s20).
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int = 3,
-                    numCells: Int = 0, nprobe: Int = 12,
-                    cacheKey: Option[String] = None): DataFrame = {
-    val kCells = resolveCells(corpus, numCells, cacheKey)
-    val cents = cachedCentroids(corpus, kCells, iters = 3, cacheKey)
+                    numCells: Int = 0, nprobe: Int = 12): DataFrame = {
+    val kCells = if (numCells > 0) numCells else derivedNumCells(corpus)
+    val cents = centroidMatrix(corpus, kCells, iters = 3)
     val c = corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
         col("label").as("n_label"))
       .withColumn("cell_id", assignBest(col("n_emb"), cents))
@@ -1578,7 +1516,7 @@ object Similarity {
   /** Verified entry (s27). Sort is oracle-determinism only. */
   def s27(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.vectors(spark, dir)
-    hardNegatives(querySet(emb), emb, cacheKey = Some(dir))
+    hardNegatives(querySet(emb), emb)
       .orderBy(col("q_id"), col("rank"))
   }
 }

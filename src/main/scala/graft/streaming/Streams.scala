@@ -170,6 +170,14 @@ object Streams {
 
   private val runCounter = new AtomicInteger(0)
 
+  /** `df` on a cloned session whose shuffle-partition count (the
+    * state-store shard count a stream freezes into its checkpoint) is
+    * `statePartitions`; `df` itself when None.
+    */
+  private def withStatePartitions(df: DataFrame, statePartitions: Option[Int]): DataFrame =
+    statePartitions.fold(df)(n => org.apache.spark.sql.GraftBridge.withConfScope(df,
+      "spark.sql.shuffle.partitions" -> n.toString))
+
   /** Run a (bounded) streaming DataFrame to completion into a memory
     * sink and return the result as a batch DataFrame. Used to prove
     * stream/batch parity on file-backed sources.
@@ -186,11 +194,7 @@ object Streams {
     */
   def runToMemory(df: DataFrame, outputMode: String = "complete",
                   statePartitions: Option[Int] = None): DataFrame = {
-    val scoped = statePartitions match {
-      case Some(n) => org.apache.spark.sql.GraftBridge.withConfScope(df,
-        "spark.sql.shuffle.partitions" -> n.toString)
-      case None => df
-    }
+    val scoped = withStatePartitions(df, statePartitions)
     val name = s"graft_mem_${runCounter.incrementAndGet()}"
     val q = scoped.writeStream.format("memory").queryName(name)
       .outputMode(outputMode)
@@ -281,11 +285,7 @@ object Streams {
   def runGoldMergeToMemory(silver: DataFrame, keyCol: String,
                            statePartitions: Option[Int] = None,
                            maxStateRows: Int = 1 << 20): DataFrame = {
-    val scoped = statePartitions match {
-      case Some(n) => org.apache.spark.sql.GraftBridge.withConfScope(silver,
-        "spark.sql.shuffle.partitions" -> n.toString)
-      case None => silver
-    }
+    val scoped = withStatePartitions(silver, statePartitions)
     val state = new java.util.LinkedHashMap[
       (java.sql.Timestamp, java.sql.Timestamp, String), (Long, Double)]()
     val q = scoped.writeStream
@@ -341,11 +341,7 @@ object Streams {
   def runUpsertToMemory(df: DataFrame, keyCols: Seq[String],
                         statePartitions: Option[Int] = None,
                         maxStateRows: Int = 1 << 20): DataFrame = {
-    val scoped = statePartitions match {
-      case Some(n) => org.apache.spark.sql.GraftBridge.withConfScope(df,
-        "spark.sql.shuffle.partitions" -> n.toString)
-      case None => df
-    }
+    val scoped = withStatePartitions(df, statePartitions)
     val state = new java.util.LinkedHashMap[Seq[Any], org.apache.spark.sql.Row]()
     val q = scoped.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -694,19 +694,6 @@ object Curation {
       .filter(col("doc_id") === col("__keep_id"))
       .drop("__keep_id")
 
-  /** Cross-call survivor-set cache, keyed like the IVF centroid
-    * registry: bounded by distinct (key, minScore) pairs per JVM, and
-    * reusable across repeated invocations on the same corpus. Keyed
-    * entries use `persist` (pinned, shared); un-keyed calls use an
-    * eager `localCheckpoint` instead — its blocks are
-    * reference-tracked by the ContextCleaner and freed when the
-    * result is no longer reachable, so one-off invocations don't pin
-    * storage for the JVM lifetime the way an unmatched `persist`
-    * would.
-    */
-  private val survivorCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double), DataFrame]()
-
   /** x4b: the full production curation chain — x4 plus NEAR-dup
     * clustering between scoring and capping: minhash-LSH pairs over
     * the normalized surviving text (one signature pass, a
@@ -717,31 +704,21 @@ object Curation {
     * rewrites; this is the chain a pretraining corpus actually runs,
     * and every stage stays the scale shape its standalone entry
     * proved (the pair stage is banded LSH, never all-pairs).
+    *
+    * `cacheKey` is unused and ignored: nothing a call computes
+    * outlives it, so two calls on the same frame do the same work.
+    * The parameter stays only so callers that pass `cacheKey = None`
+    * by name still compile.
     */
   def curateNearDup(docs: DataFrame, minScore: Double = 0.5,
                     cap: Int = 20, cacheKey: Option[String] = None): DataFrame = {
     // the survivor set feeds three consumers (pair generation, the
-    // node list, and the final keep join) — materialize it once
-    val deduped = cacheKey match {
-      case Some(key) =>
-        val k = (key, minScore)
-        // a cached frame is only usable while the SparkContext that
-        // persisted its blocks is alive and is the caller's own:
-        // after spark.stop() it is bound to a dead context, and a
-        // NEW context must not inherit the old plan. Conf-scoped
-        // session CLONES (same context) still hit — the persisted
-        // blocks belong to the context, not the session wrapper.
-        val cached = survivorCache.get(k)
-        val stale = cached != null &&
-          (cached.sparkSession.sparkContext.isStopped ||
-            !(cached.sparkSession.sparkContext eq docs.sparkSession.sparkContext))
-        if (stale) survivorCache.remove(k, cached)
-        survivorCache.computeIfAbsent(k,
-          _ => scoreAndExactDedup(docs, minScore).persist())
-      case None => scoreAndExactDedup(docs, minScore).localCheckpoint()
-    }
+    // node list, and the final keep join); an eager local checkpoint
+    // computes it once per call, and the ContextCleaner frees its
+    // blocks once the result is no longer reachable
+    val deduped = scoreAndExactDedup(docs, minScore).localCheckpoint()
     // the joinback LSH spelling (d2b): the band shuffle is
-    // signature-free and the signature map re-reads the PERSISTED
+    // signature-free and the signature map re-reads the CHECKPOINTED
     // survivor blocks — ~bands× less shuffle weight than carrying
     // signatures through every band row, pair-identical (spec-gated)
     val pairs = graft.dedup.Dedup.minhashLshPairsJoinback(deduped, threshold = 0.5)
@@ -757,8 +734,7 @@ object Curation {
     * library chain returns its curated set unordered — x10's rule).
     */
   def x4bCuration(spark: SparkSession, dir: String): DataFrame =
-    curateNearDup(Tables.documents(spark, dir), cacheKey = Some(dir))
-      .orderBy(col("doc_id"))
+    curateNearDup(Tables.documents(spark, dir)).orderBy(col("doc_id"))
 
   /** Quality-threshold survival sweep (x19): for a ladder of
     * candidate quality cutoffs, how many documents and tokens

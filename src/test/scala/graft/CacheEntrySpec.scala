@@ -31,4 +31,14 @@ class CacheEntrySpec extends GraftSpecBase {
     }.filter(_._2 != 0)
     assert(left.isEmpty, s"new cache entries after one call: $left")
   }
+
+  test("curateNearDup ignores cacheKey: a keyed call leaves no CacheManager entry behind") {
+    // a key no other call uses, so a keyed survivor cache (were there
+    // one) could not already hold an entry for it
+    val before = numCachedEntries
+    text.Curation.curateNearDup(Tables.documents(spark, sf),
+      cacheKey = Some("CacheEntrySpec-keyed-curateNearDup")).collect()
+    assert(numCachedEntries - before == 0,
+      s"a keyed curateNearDup call left ${numCachedEntries - before} new cache entries")
+  }
 }

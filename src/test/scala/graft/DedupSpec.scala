@@ -392,7 +392,7 @@ class DedupSpec extends GraftSpecBase {
 
   test("d9: semantic dedup keeps min-id anchors; deduped corpus is a fixed point") {
     val emb = Tables.embeddings(spark, sf)
-    val r = dedup.SemDedup.semanticDedup(emb, cacheKey = Some(sf)).collect()
+    val r = dedup.SemDedup.semanticDedup(emb).collect()
       .map(x => (x.getLong(0), x.getInt(1), x.getLong(2),
         if (x.isNullAt(3)) None else Some(x.getLong(3)), x.getBoolean(4)))
     assert(r.nonEmpty && r.exists(!_._5), "the corpus has semantic near-dups")
@@ -409,12 +409,19 @@ class DedupSpec extends GraftSpecBase {
     r.foreach { case (id, cell, _, dupOf, _) =>
       dupOf.foreach(a => assert(cellOf(a) == cell, s"$id: anchor in same cell"))
     }
-    // running dedup over the kept subset (same cached quantizer) drops
-    // nothing: within a cell the kept set has no remaining tau-pairs
-    val keptIds = r.filter(_._5).map(_._1).toSet
-    val kept = emb.filter(col("vec_id").isInCollection(keptIds))
-    val again = dedup.SemDedup.semanticDedup(kept, cacheKey = Some(sf)).collect()
-    assert(again.forall(_.getBoolean(4)), "dedup of the deduped corpus is a no-op")
+    // fixed point: under the same cells, no kept vector has a smaller
+    // kept same-cell neighbor at cosine >= tau (0.4), so deduping the
+    // kept set with this quantizer would drop nothing
+    import spark.implicits._
+    import graft.functions.GraftFunctions.cosine_sim
+    val kept = r.filter(_._5).map(x => (x._1, x._2)).toSeq.toDF("vec_id", "cell")
+      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
+    val leftover = kept.alias("a")
+      .join(kept.alias("b"), col("a.cell") === col("b.cell") && col("b.vec_id") < col("a.vec_id"))
+      .filter(cosine_sim(col("a.embedding"), col("b.embedding")) >= 0.4)
+      .select(col("a.vec_id"), col("b.vec_id")).collect()
+    assert(leftover.isEmpty,
+      s"kept same-cell pairs still at cosine >= 0.4: ${leftover.take(5).toSeq}")
   }
 
   test("d14 cross-source matrix: pair sources fold unordered, counts hand-checked") {

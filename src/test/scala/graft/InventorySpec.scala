@@ -7,10 +7,16 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level invariants: SURVEY.md §2's coverage table,
   * `SparkEntry.queries` and `SparkEntry.oracleSql` can never drift
   * apart silently, every family-builder call site forwards the
-  * strict/report valve, and library code persists nothing outside the
-  * named exceptions. Pure file/registry parsing — no SparkSession.
+  * strict/report valve, and library code persists nothing and holds
+  * no object-level map outside the named exceptions. Pure
+  * file/registry parsing — no SparkSession.
   */
 class InventorySpec extends AnyFunSuite {
+
+  /** A source line that is code, not a comment or scaladoc line. */
+  private def code(line: String): Boolean = {
+    val t = line.trim; !t.startsWith("*") && !t.startsWith("//")
+  }
 
   private def surveySection2Keys: Set[String] = {
     val lines = Files.readAllLines(Paths.get("SURVEY.md")).asScala
@@ -86,19 +92,13 @@ class InventorySpec extends AnyFunSuite {
     // by enclosing def:
     //  - Clusters.connectedComponents (over-limit edge frame) and
     //    Clusters.propagateMinLabel (loop state): each unpersists
-    //    within the same call;
-    //  - Curation.curateNearDup: the keyed survivor cache, the last
-    //    cross-call cache still open in ROADMAP item 5.
+    //    within the same call.
     val allowed = Set(
       "dedup/Clusters.scala" -> "connectedComponents",
-      "dedup/Clusters.scala" -> "propagateMinLabel",
-      "text/Curation.scala" -> "curateNearDup")
+      "dedup/Clusters.scala" -> "propagateMinLabel")
     val root = Paths.get("src/main/scala/graft")
     val Def = """.*\bdef (\w+).*""".r
     val Persist = """.*(\.persist\(|\.cache\(\)).*""".r
-    def code(line: String): Boolean = {
-      val t = line.trim; !t.startsWith("*") && !t.startsWith("//")
-    }
     val found = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
       .flatMap { f =>
@@ -118,5 +118,39 @@ class InventorySpec extends AnyFunSuite {
     // allow a new persist in a def that no longer needs one
     assert(allowed.subsetOf(found.map { case (f, d, _) => (f, d) }.toSet),
       s"stale exception: ${allowed -- found.map { case (f, d, _) => (f, d) }}")
+  }
+
+  test("operators keep no cross-call state: no object-level ConcurrentHashMap outside the named exceptions") {
+    // A map held by an object outlives every call, so an operator that
+    // memoizes into one answers from whatever ran earlier in the JVM
+    // rather than from the frame it is given. Exceptions, by val name:
+    //  - the Lake fixture lakes, one temp lake per testdata dir: they
+    //    need a caller-owned lifetime before they can go;
+    //  - Lake.commitClaims (commit synchronisation) and Lake.tempRoots
+    //    (exit cleanup), which hold no results.
+    val allowed = Set("lakeCache", "bucketCache", "evoCache", "backfillCache",
+      "mergeCache", "compactCache", "wapCache", "manifestCache", "orphanCache",
+      "occCache", "commitClaims", "tempRoots").map("sources/Lake.scala" -> _)
+    val root = Paths.get("src/main/scala/graft")
+    // an object member sits at the object body's two-space indent; the
+    // initializer may open on the line after the `val`
+    val Member = """^  (?:private(?:\[\w+\])? )?(?:lazy )?va[lr] (\w+)\b.*""".r
+    val found = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val lines = Files.readAllLines(f).asScala.toIndexedSeq
+        lines.indices.collect {
+          case i if lines(i).contains("ConcurrentHashMap") && code(lines(i)) =>
+            (root.relativize(f).toString,
+              (lines(i) +: lines.lift(i - 1).toSeq).collectFirst { case Member(v) => v }, i + 1)
+        }
+      }
+      .collect { case (f, Some(v), n) => (f, v, n) }
+    val offenders = found.filterNot { case (f, v, _) => allowed((f, v)) }
+    assert(offenders.isEmpty,
+      s"object-level map in library code (derive from the frame within the call instead):\n  " +
+        offenders.map { case (f, v, n) => s"$f:$n $v" }.mkString("\n  "))
+    assert(allowed.subsetOf(found.map { case (f, v, _) => (f, v) }.toSet),
+      s"stale exception: ${allowed -- found.map { case (f, v, _) => (f, v) }}")
   }
 }

@@ -499,6 +499,23 @@ class PlanShapeSpec extends GraftSpecBase {
       "a36: banded and window spellings must be row-identical")
   }
 
+  test("banded a28/a35: ntile's n comes off the per-band counts — the per-customer aggregate runs once") {
+    // A separate count(lit(1)) over the per-customer frame prunes that
+    // aggregate to its key, so it no longer matches the ranked chain's
+    // exchange and aggregates orders once more; summing the offsets
+    // branch's per-band counts reads the exchange already computed.
+    val orders = Tables.orders(spark, sf)
+    for ((name, df, scans) <- Seq(
+        ("a28", analytics.Queries.spendDeciles(spark, sf, bandedMinBytes = 0), 1),
+        // a35 also scans orders for its 1-row max-date scalar
+        ("a35", analytics.Queries.rfmSegments(orders, bandedMinBytes = 0), 2))) {
+      val plan = finalPlan(df)
+      val (computed, _) = exchangeCounts(plan, "Exchange hashpartitioning\\(o_custkey")
+      assert(computed == 1, s"$name: the per-customer aggregate must be computed once:\n$plan")
+      assert(fileScans(plan) == scans, s"$name: expected $scans orders scans:\n$plan")
+    }
+  }
+
   test("x15: interleave never rangepartitions the corpus — banded prefix-sum like x10") {
     val plan = finalPlan(text.Curation.interleaveBySource(
       Tables.documents(spark, sf).select("doc_id", "source")))
@@ -520,8 +537,7 @@ class PlanShapeSpec extends GraftSpecBase {
   }
 
   test("s15: kNN graph — cell equi-join, no in-query training, no pairwise corpus product") {
-    val plan = finalPlan(similarity.Similarity.knnGraph(
-      Tables.embeddings(spark, sf), cacheKey = Some(sf)))
+    val plan = finalPlan(similarity.Similarity.knnGraph(Tables.embeddings(spark, sf)))
     assert(!plan.contains("posexplode"),
       s"centroid training must never run inside the query:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
@@ -731,7 +747,7 @@ class PlanShapeSpec extends GraftSpecBase {
       "exactJaccardPairs" -> dedup.Dedup.exactJaccardPairs(docs, threshold = 0.65),
       "containmentPairs" -> dedup.Dedup.containmentPairs(docs, threshold = 0.85),
       "embeddingNearDupsBlocked" -> dedup.Dedup.embeddingNearDupsBlocked(emb, threshold = 0.45),
-      "semanticDedup" -> dedup.SemDedup.semanticDedup(emb, numCells = 16, cacheKey = Some(sf)),
+      "semanticDedup" -> dedup.SemDedup.semanticDedup(emb, numCells = 16),
       "contaminated" -> dedup.Contamination.contaminated(
         docs.filter(col("source") =!= "src0"), docs.filter(col("source") === "src0")))
     for ((name, df) <- libraryResults) {

@@ -27,14 +27,13 @@ class SimilaritySpec extends GraftSpecBase {
     // the verified corpora sit on the floor, so every family entry
     // trains the SAME quantizer the fixed-16 default trained — the
     // oracle-parity invariance the CORRECTNESS gate rides on
-    assert(similarity.Similarity.derivedNumCells(
-        Tables.vectors(spark, sf), cacheKey = Some(sf)) == 16,
+    assert(similarity.Similarity.derivedNumCells(Tables.vectors(spark, sf)) == 16,
       "the test corpus must derive the floor, keeping replays bit-identical")
     // and the derived default therefore changes NOTHING on the exact
     // results here: graph(default) == graph(explicit 16)
-    val d = similarity.Similarity.knnGraph(emb, cacheKey = Some(sf))
+    val d = similarity.Similarity.knnGraph(emb)
       .collect().map(_.toSeq).toSet
-    val p = similarity.Similarity.knnGraph(emb, numCells = 16, cacheKey = Some(sf))
+    val p = similarity.Similarity.knnGraph(emb, numCells = 16)
       .collect().map(_.toSeq).toSet
     assert(d == p, "derived-default graph must equal the explicit-16 graph at the floor")
   }
@@ -60,8 +59,8 @@ class SimilaritySpec extends GraftSpecBase {
     val got = similarity.Similarity.knnGraph(corpus, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     // independent local recomputation from the SAME deterministic
-    // trainer output (cachedCentroids is pure in (corpus, k, iters))
-    val cents = similarity.Similarity.cachedCentroids(corpus, 40, iters = 3, None)
+    // trainer output (centroidMatrix is pure in (corpus, k, iters))
+    val cents = similarity.Similarity.centroidMatrix(corpus, 40, iters = 3)
     def cos(a: Array[Double], b: Array[Double]): Double = {
       val dot = a.zip(b).map { case (x, y) => x * y }.sum
       val den = math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum)
@@ -696,15 +695,14 @@ class SimilaritySpec extends GraftSpecBase {
     // probe misses few of the exact (all-cells) hard negatives
     val emb = Tables.embeddings(spark, sf)
     val qs = emb.filter(col("vec_id") % 50 === 0)
-    val probed = similarity.Similarity.hardNegatives(qs, emb, cacheKey = Some(sf))
+    val probed = similarity.Similarity.hardNegatives(qs, emb)
       .collect().map(x => (x.getLong(0), x.getLong(2), x.getLong(4), x.getLong(1), x.getLong(3)))
     assert(probed.nonEmpty)
     assert(probed.forall(t => t._4 != t._5), "every mined negative crosses labels")
     probed.groupBy(_._1).foreach { case (qid, rs) =>
       assert(rs.map(_._3).sorted.toSeq == (1L to rs.length), s"q $qid ranks dense")
     }
-    val exact = similarity.Similarity.hardNegatives(qs, emb, nprobe = 16,
-        cacheKey = Some(sf))
+    val exact = similarity.Similarity.hardNegatives(qs, emb, nprobe = 16)
       .collect().map(x => (x.getLong(0), x.getLong(2))).toSet
     val hit = probed.map(t => (t._1, t._2)).count(exact.contains)
     assert(hit.toDouble / exact.size >= 0.9,
